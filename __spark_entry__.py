@@ -198,7 +198,6 @@ from ollie_spark.spark.textops import (BM25_B as _BM25_B,  # noqa: E402
                                        doc_fingerprint, minhash_band_pairs,
                                        ngram_jaccard_pairs, sign_cell,
                                        simhash16, text_quality,
-                                       token_counts,  # noqa: F401
                                        token_counts_from_words,
                                        spread_small_scan as _spread)
 

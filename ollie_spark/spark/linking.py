@@ -12,13 +12,13 @@ Scale notes (100 TB / 10^12 docs):
   3-gram array — pure whole-stage-codegen map work over the *distinct*
   entity strings (cardinality « mention count).
 - LSH banding self-joins on the band key only; hot buckets are capped
-  (and counted via `dropped_buckets`) so one degenerate band cannot
-  produce O(n^2) pairs.
-- Connected components defaults to min-label propagation — O(graph
+  by `materialize.cap_blocks` (and counted in ``metrics_out`` as
+  `dropped_buckets`) so one degenerate band cannot produce O(n^2)
+  pairs.
+- Connected components resolves small pair sets with a driver-side
+  min-root union-find; larger ones run min-label propagation — O(graph
   diameter) join+agg rounds, tiny for shallow star-like near-dup
-  blocks, with a loud warning if max_iter exhausts — and offers the
-  large-star/small-star algorithm (O(log n) rounds independent of
-  diameter) for adversarially chain-shaped graphs.
+  blocks, with a loud warning if max_iter exhausts.
 - The final mentions->canonical join salts the canonical map S ways and
   hashes mentions into the same salt space: mention skew spreads over S
   reducers while the map side only replicates S×.  AQE skew-join stays
@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ollie_spark.spark.materialize import materialize_once
+from ollie_spark.spark.materialize import cap_blocks, materialize_once
 
 DETERMINERS = ("the", "a", "an", "this", "that", "these", "those", "some",
                "any", "each", "every", "its", "his", "her", "their", "our")
@@ -114,9 +114,8 @@ def minhash_signature(df: DataFrame, col: str = "norm",
 def _lsh_banded(entities: DataFrame, num_hashes: int,
                 bands: int) -> DataFrame:
     """(norm, band_key): minhash signatures banded — the SINGLE band
-    construction the pair generator and the dropped-bucket metric both
-    read (previously duplicated between the two, a hand-mirroring
-    drift hazard)."""
+    construction the pair generator, band_entities and incremental_link
+    read."""
     rows = num_hashes // bands
     sigs = minhash_signature(entities.select("norm"), num_hashes=num_hashes)
     return sigs.select(
@@ -135,40 +134,15 @@ def lsh_candidate_pairs(entities: DataFrame, num_hashes: int = 16,
     """(norm_a, norm_b) near-duplicate candidates, verified by token
     Jaccard.  ``entities`` must have distinct ``norm``.
 
-    Pass ``metrics_out`` (a dict) to receive ``dropped_buckets`` —
-    counted off the same materialized sized frame the self-join reads,
-    so pairs + metric cost one signature computation."""
-    # materialize the banded frame ONCE: aliasing the lazy plan as
-    # both self-join sides re-runs the whole minhash signature
-    # pipeline per side (the dominant cost of canonicalize's blocking
-    # stage).  Bucket sizes come from a map-side-combining
-    # groupBy(band_key) over the materialized frame + an equi-join
-    # back (r6): the former window count colocated every row of a
-    # band on ONE task — the most degenerate bucket (the exact case
-    # the cap catches) funneled through a single task before the cap
-    # could drop it; the groupBy shuffles only (band_key,
-    # partial-count) rows and AQE can skew-split the join, which a
-    # window cannot.  The dropped metric is one count over the sizes
-    # frame — still no second signature computation.
-    banded = materialize_once(_lsh_banded(entities, num_hashes, bands))
-    sizes = banded.groupBy("band_key").agg(
-        F.count("*").alias("bucket_n"))
-    # r7: the sizing agg runs eagerly ONCE (materialized) and its
-    # dropped count decides the join — when NO bucket exceeds the cap
-    # the filter join is an identity, so skip it and its second
-    # full-frame materialization barrier outright (the common case);
-    # the capped path reads the STORED sizes, never re-running the agg.
-    sizes = materialize_once(sizes)
-    dropped = sizes.where(F.col("bucket_n") > max_bucket).count()
+    Pass ``metrics_out`` (a dict) to receive ``dropped_buckets``, the
+    number of band buckets over ``max_bucket`` (see
+    :func:`~ollie_spark.spark.materialize.cap_blocks`).  Both self-join
+    sides and the sizing read one materialized band frame, so pairs +
+    metric cost one signature computation."""
+    kept, dropped = cap_blocks(_lsh_banded(entities, num_hashes, bands),
+                               ["band_key"], max_bucket)
     if metrics_out is not None:
         metrics_out["dropped_buckets"] = dropped
-    if dropped == 0:
-        kept = banded
-    else:
-        kept = materialize_once(
-            banded.join(sizes.where(F.col("bucket_n") <= max_bucket),
-                        "band_key")
-            .drop("bucket_n"))
     a = kept.alias("a")
     b = kept.alias("b")
     pairs = (a.join(b, "band_key")
@@ -214,21 +188,6 @@ def band_entities(entities: DataFrame, num_hashes: int = 16,
                        num_hashes, bands)
 
 
-def dropped_buckets(entities: DataFrame, num_hashes: int = 16,
-                    bands: int = 8, max_bucket: int = 64) -> int:
-    """How many LSH buckets the cap skipped (metrics, not silent).
-
-    Metric-only path over the generator's own band construction
-    (``_lsh_banded`` — no duplicated banding to hand-mirror),
-    aggregated with a map-side-combining groupBy — the same sizing
-    shape the generator itself uses since r6 (no window funnel on
-    either path).  When you also need the pairs, pass ``metrics_out``
-    to :func:`lsh_candidate_pairs` / :func:`canonicalize` instead."""
-    banded = _lsh_banded(entities, num_hashes, bands)
-    return (banded.groupBy("band_key").count()
-            .where(F.col("count") > max_bucket).count())
-
-
 def _frame_sig(df: DataFrame, cols) -> tuple:
     """Probabilistic row-set equality signature: (count, sum of
     xxhash64(cols), sum of xxhash64(cols, 1)) in ONE agg job.  The
@@ -251,10 +210,48 @@ def _frame_sig(df: DataFrame, cols) -> tuple:
     return (r["n"], r["h1"], r["h2"])
 
 
+def _union_find(edges) -> dict:
+    """{vertex: component} over an iterable of (a, b) edges: min-root
+    union-find, so every component is labelled by its minimum vertex —
+    the same label the distributed min-label loop converges to.  Shared
+    by both driver-side paths (connected_components' escape hatch and
+    _local_blocking_components)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in parent}
+
+
+def _components_frame(spark, rows) -> DataFrame:
+    """Ship driver-resolved (norm, component) rows back to Spark.
+
+    A pandas frame lands, with Arrow enabled, as a JVM LocalRelation,
+    so every downstream evaluation is JVM-only — the plain-list form
+    becomes a pickled python RDD that spins python workers on EACH
+    evaluation of the plan (measured 3.6s cold / 0.5s warm per count at
+    32 cores vs 0.25s for the Arrow path).  The schema is explicit: an
+    empty row list has no values to infer one from."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["norm", "component"]),
+        "norm string, component string")
+
+
 def connected_components(pairs: DataFrame, vertices: DataFrame,
                          max_iter: int = 15,
-                         local_threshold: int = 1_000_000,
-                         algorithm: str = "min_label") -> DataFrame:
+                         local_threshold: int = 1_000_000) -> DataFrame:
     """Distributed connected components: (norm, component) per vertex.
 
     Only vertices that occur in ``pairs`` enter the iteration — at web
@@ -274,20 +271,13 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
     budget ~0.5 GB per 1M pairs at the default threshold.  Drivers
     with <2 GB of headroom should pass a smaller ``local_threshold``;
     correctness is unaffected either way (the distributed loop computes
-    the same components, property-tested below).
+    the same components, property-tested in tests/test_linking.py).
 
-    ``algorithm``:
-    - ``min_label`` (default): label propagation — O(graph diameter)
-      rounds.  Near-dup blocks are shallow star-like clusters, so the
-      diameter is tiny in practice; if the loop exhausts ``max_iter``
-      while labels are still changing it emits a warning (components
-      may be split) rather than failing silently.
-    - ``star``: alternating large-star/small-star (Kiveris et al.,
-      "Connected Components in MapReduce and Beyond") — O(log n) rounds
-      regardless of diameter, for adversarially chain-shaped graphs."""
-    if algorithm not in ("min_label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}; "
-                         f"expected 'min_label' or 'star'")
+    The distributed path is min-label propagation — O(graph diameter)
+    rounds.  Near-dup blocks are shallow star-like clusters, so the
+    diameter is tiny in practice; if the loop exhausts ``max_iter``
+    while labels are still changing it emits a warning (components may
+    be split) rather than failing silently."""
     sym = (pairs.select(F.col("norm_a").alias("src"),
                         F.col("norm_b").alias("dst"))
            .unionByName(pairs.select(F.col("norm_b").alias("src"),
@@ -326,45 +316,16 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
         # orientation works.
         edges_local = (sym.where(F.col("src") <= F.col("dst"))
                        .select("src", "dst").collect())
-        parent = {}
-        for r in edges_local:
-            parent.setdefault(r.src, r.src)
-            parent.setdefault(r.dst, r.dst)
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in edges_local:
-            ra, rb = find(r.src), find(r.dst)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        rows = [(v, find(v)) for v in parent]
-        spark = pairs.sparkSession
-        # ship the resolved components back as a pandas frame: with
-        # Arrow enabled this lands as a JVM LocalRelation, so every
-        # downstream evaluation is JVM-only — the plain-list form
-        # becomes a pickled python RDD that spins python workers on
-        # EACH evaluation of the plan (measured 3.6s cold / 0.5s warm
-        # per count at 32 cores vs 0.25s for the Arrow path)
-        import pandas as pd
-
-        local = spark.createDataFrame(
-            pd.DataFrame(rows, columns=["norm", "component"]))
-        return local.unionByName(isolated)
-
-    if algorithm == "star":
-        return _star_components(sym, max_iter).unionByName(isolated)
+        roots = _union_find((r.src, r.dst) for r in edges_local)
+        return (_components_frame(pairs.sparkSession, list(roots.items()))
+                .unionByName(isolated))
 
     labels = connected_verts.select(
         "norm", F.col("norm").alias("component"))
     # convergence probe: the vertex set is fixed, so the label frame
     # changed iff its (count, hash-sum, hash-sum') signature moved —
-    # ONE agg job per round instead of a join + count (the same
-    # probabilistic probe _star_components uses; see _frame_sig for
-    # the collision argument).
+    # ONE agg job per round instead of a join + count (see _frame_sig
+    # for the collision argument).
     sig = _frame_sig(labels, ("norm", "component"))
     changed = True
     for _ in range(max_iter):
@@ -387,88 +348,9 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
             f"connected_components: min-label loop exhausted "
             f"max_iter={max_iter} with labels still changing — "
             f"components may be split (graph diameter > max_iter); "
-            f"raise max_iter or use algorithm='star'",
+            f"raise max_iter",
             RuntimeWarning, stacklevel=2)
     return labels.unionByName(isolated)
-
-
-def _star_components(sym: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Alternating large-star / small-star rounds over a *symmetric*
-    edge set -> (norm, component) for every vertex in it.
-
-    Per round (Kiveris et al. 2014): large-star hangs every neighbor
-    v > u under min(N(u) ∪ {u}); small-star rewires the v <= u
-    neighborhood the same way.  Converges in O(log n) rounds to a
-    forest of depth-1 stars rooted at each component's minimum label,
-    independent of graph diameter."""
-    verts = materialize_once(
-        sym.select(F.col("src").alias("norm")).distinct())
-    # work on undirected unique edges (u > v canonical direction);
-    # per-round frames below keep localCheckpoint for iterative
-    # lineage truncation (see connected_components)
-    edges = materialize_once(
-        sym.where(F.col("src") > F.col("dst"))
-        .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .distinct())
-
-    def _sym(e):
-        return e.unionByName(e.select(F.col("v").alias("u"),
-                                      F.col("u").alias("v")))
-
-    def _edge_sig(e):
-        # probabilistic convergence probe (see _frame_sig): distinct
-        # edge sets are treated equal iff count AND two independently
-        # seeded hash sums agree — one agg job instead of two exceptAll
-        # probes per round.
-        return _frame_sig(e, ("u", "v"))
-
-    sig = _edge_sig(edges)
-    converged = False
-    for _ in range(max_iter):
-        # large-star: m = min over N(u) ∪ {u}; attach v > u to m
-        s = _sym(edges)
-        m = s.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        big = (s.join(m, "u")
-               .where(F.col("v") > F.col("u"))
-               .select(F.col("v").alias("u"), F.col("m").alias("v"))
-               .where(F.col("u") != F.col("v"))
-               .distinct())
-        # small-star over the attach edges: m = min over {u} ∪ {v<=u}.
-        # big is ALREADY canonical u > v (large-star attaches each old
-        # v to m <= old u < old v), so the whole set is the v<=u
-        # neighborhood — no filter needed.
-        m2 = big.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        small = (big.join(m2, "u")
-                 .select(F.col("v").alias("a"), F.col("m").alias("b"))
-                 .unionByName(m2.select(F.col("u").alias("a"),
-                                        F.col("m").alias("b")))
-                 .where(F.col("a") != F.col("b"))
-                 .select(F.greatest("a", "b").alias("u"),
-                         F.least("a", "b").alias("v"))
-                 .distinct()
-                 .localCheckpoint(eager=True))
-        new_sig = _edge_sig(small)
-        stable = new_sig == sig
-        edges, sig = small, new_sig
-        if stable:
-            converged = True
-            break
-    if not converged:
-        import warnings
-        warnings.warn(
-            f"_star_components: loop exhausted max_iter={max_iter} "
-            f"before the edge set stabilized (probabilistic "
-            f"hash-signature stability probe) — components may be "
-            f"split; raise max_iter", RuntimeWarning, stacklevel=2)
-    # at convergence every non-root hangs directly off its component
-    # min; roots are vertices that never appear as a 'u'
-    labels = edges.select(F.col("u").alias("norm"),
-                          F.col("v").alias("component"))
-    roots = verts.join(labels.select("norm"), "norm", "left_anti") \
-        .select("norm", F.col("norm").alias("component"))
-    return labels.unionByName(roots)
 
 
 def _local_blocking_components(norms, num_hashes: int = 16,
@@ -484,8 +366,9 @@ def _local_blocking_components(norms, num_hashes: int = 16,
     comma-joined signature-slot strings (Long.toString == str(int) for
     every long), buckets over max_bucket are dropped and counted the
     same way, candidate pairs are verified with the same exact
-    char-3-gram Jaccard, and components are min-root union-find — the
-    same rule every distributed CC algorithm here converges to.
+    char-3-gram Jaccard, and components come from the same min-root
+    union-find as connected_components' escape hatch (the labels the
+    distributed min-label loop converges to).
     Equivalence on real corpus norms is pinned by
     test_linking.test_local_blocking_matches_distributed.
 
@@ -539,26 +422,12 @@ def _local_blocking_components(norms, num_hashes: int = 16,
             for b in uniq[i + 1:]:
                 cand.add((a, b))
 
-    parent = {}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in cand:
+    def verified(a, b):
         ga, gb = gram_cache[a], gram_cache[b]
-        if len(ga & gb) / len(ga | gb) < jaccard_threshold:
-            continue
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
+        return len(ga & gb) / len(ga | gb) >= jaccard_threshold
 
-    rows = [(n, find(n) if n in parent else n) for n in norms]
-    return rows, dropped
+    roots = _union_find((a, b) for a, b in cand if verified(a, b))
+    return [(n, roots.get(n, n)) for n in norms], dropped
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,
@@ -696,14 +565,7 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
             norms, num_hashes=num_hashes, bands=bands)
         if metrics_out is not None:
             metrics_out["dropped_buckets"] = dropped
-        import pandas as pd
-
-        spark = mentions.sparkSession
-        # pandas/Arrow -> JVM LocalRelation (the union-find hatch's
-        # ship-back discipline: a plain-list createDataFrame would spin
-        # python workers per downstream evaluation)
-        comp = spark.createDataFrame(
-            pd.DataFrame(comp_rows, columns=["norm", "component"]))
+        comp = _components_frame(mentions.sparkSession, comp_rows)
     else:
         pairs = lsh_candidate_pairs(entities, num_hashes=num_hashes,
                                     bands=bands, metrics_out=metrics_out)

@@ -60,6 +60,37 @@ def materialize_once(df: DataFrame) -> DataFrame:
     return df
 
 
+def cap_blocks(frame: DataFrame, key_cols: list,
+               cap: int | None) -> tuple:
+    """(kept, dropped): materialize a blocked frame once and drop every
+    block (one distinct ``key_cols`` value) with more than ``cap`` rows
+    — the cap-and-count step every self-join pair generator runs before
+    its join (linking.lsh_candidate_pairs, textops.minhash_band_pairs,
+    textops.ngram_jaccard_pairs), so one degenerate block cannot emit
+    O(block^2) pairs.  ``dropped`` is the number of dropped blocks;
+    callers report it in ``metrics_out``, so a drop is never silent.
+
+    Block sizes come from a map-side-combining ``groupBy``, not a
+    window: a window colocates every row of the most degenerate block
+    on one task before the cap can drop it, and the equi-join back is
+    one AQE can skew-split.  The sizes are materialized and counted
+    eagerly, so when nothing is over the cap (the common case) the
+    filter join is skipped and the materialized frame is returned
+    as-is; otherwise the capped path reads the stored sizes and
+    materializes the kept rows once.  ``cap=None`` disables the cap."""
+    frame = materialize_once(frame)
+    if cap is None:
+        return frame, 0
+    sizes = materialize_once(
+        frame.groupBy(*key_cols).agg(F.count("*").alias("_n")))
+    dropped = sizes.where(F.col("_n") > cap).count()
+    if dropped == 0:
+        return frame, 0
+    kept = materialize_once(
+        frame.join(sizes.where(F.col("_n") <= cap), key_cols).drop("_n"))
+    return kept, dropped
+
+
 def with_bucket(df: DataFrame, n_buckets: int,
                 key: str = "doc_id") -> DataFrame:
     return df.withColumn(

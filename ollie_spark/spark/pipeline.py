@@ -329,14 +329,6 @@ def _sp(span):
     return {"start": int(span[0]), "end": int(span[1])}
 
 
-def _error_row(doc_id, span_idx, msg):
-    return {"doc_id": doc_id, "span_idx": int(span_idx), "sent_idx": 0,
-            "arg1_text": None, "rel_text": None, "arg2_text": None,
-            "arg1_span": None, "rel_span": None, "arg2_span": None,
-            "enabler": None, "attribution": None, "pattern": None,
-            "openparse_conf": None, "features": None, "error": msg}
-
-
 def score(mentions: DataFrame, intercept: float,
           weights_ordered: list[float]) -> DataFrame:
     """R21: conf = sigmoid(intercept + w·f) as a native SQL expression

@@ -19,7 +19,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ollie_spark.spark.materialize import materialize_once
+from ollie_spark.spark.materialize import cap_blocks, materialize_once
 
 MINHASH_SEEDS = (17, 29, 43, 71)
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
@@ -35,8 +35,8 @@ def _stopword_filter(w):
 # / boilerplate docs sharing a minhash band); its self-join would be
 # O(bucket^2).  Measured bucket maxima on the test corpora are <= 13
 # (sf0.1), so the default never fires below web scale, where it caps
-# the blow-up.  Dropped buckets are observable via
-# ``minhash_dropped_bands`` — never silent.
+# the blow-up.  Dropped buckets are counted in minhash_band_pairs'
+# ``metrics_out["dropped_bands"]`` — never silent.
 DEFAULT_MAX_BAND_BUCKET = 256
 
 # same discipline for the Jaccard (block, token-count) blocks: token
@@ -44,7 +44,7 @@ DEFAULT_MAX_BAND_BUCKET = 256
 # tc~500 at web scale would otherwise self-join O(block^2) inside ONE
 # block).  Measured block maxima on the test corpora are <= 48 (sf0.1),
 # so the default never fires below web scale.  Dropped blocks are
-# observable via ``ngram_dropped_blocks``.
+# counted in ngram_jaccard_pairs' ``metrics_out["dropped_blocks"]``.
 DEFAULT_MAX_JACCARD_BLOCK = 256
 
 
@@ -137,27 +137,6 @@ def _minhash_banded(docs: DataFrame, id_col: str,
                         F.element_at("_sig", 4)))).alias("band_key"))
 
 
-def _minhash_sized(docs: DataFrame, id_col: str,
-                   text_col: str) -> tuple:
-    """(banded frame MATERIALIZED once, per-bucket sizes) — the SINGLE
-    band construction both the pair generator and the dropped metric
-    read, so the two can never drift apart.
-
-    The sizes come from a map-side-combining ``groupBy(band_key)``
-    (r6): the former spelling was ``count(*) over (partition by
-    band_key)``, which colocates EVERY row of a band on one window
-    task — so the most degenerate band (the exact case the cap exists
-    to catch) funneled through a single task *before* the cap could
-    drop it.  The groupBy shuffles only (band_key, partial-count) rows
-    and the join back is an equi-join AQE can skew-split, which a
-    window cannot.  The banded frame must be materialized first: both
-    the agg and the join read it, and deriving sizes from the lazy
-    plan would re-run the signature pipeline per consumer."""
-    banded = materialize_once(_minhash_banded(docs, id_col, text_col))
-    sizes = banded.groupBy("band_key").agg(F.count("*").alias("_n"))
-    return banded, sizes
-
-
 def minhash_band_pairs(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text",
                        max_bucket: int = DEFAULT_MAX_BAND_BUCKET,
@@ -166,72 +145,26 @@ def minhash_band_pairs(docs: DataFrame, id_col: str = "doc_id",
     2; pairs sharing a band bucket (a < b).
 
     Buckets larger than ``max_bucket`` are dropped before the self-join
-    (same cap-and-count discipline as linking.lsh_candidate_pairs): one
-    degenerate band key over millions of boilerplate docs must not emit
-    O(n^2) pairs.  Pass ``metrics_out`` (a dict) to receive
-    ``dropped_bands`` — counted off the SAME materialized sized frame
-    the join reads, so pairs + metric cost ONE signature computation
-    (the standalone ``minhash_dropped_bands`` recomputes signatures and
-    exists for metric-only callers)."""
-    # materialize ONCE before self-joining: aliasing the lazy plan as
+    (:func:`~ollie_spark.spark.materialize.cap_blocks`, shared with
+    linking.lsh_candidate_pairs): one degenerate band key over millions
+    of boilerplate docs must not emit O(n^2) pairs.  Pass
+    ``metrics_out`` (a dict) to receive ``dropped_bands``, counted off
+    the same materialized band frame the join reads, so pairs + metric
+    cost ONE signature computation."""
+    # materialized ONCE before self-joining: aliasing the lazy plan as
     # both sides makes Spark compute the minhash signature pipeline
     # (and re-scan the source) independently per side — at web scale
-    # the signature map dominates the dedup stage, so that doubles it.
-    # The capped path materializes twice (the narrow banded frame the
-    # sizing agg + join read, then the capped frame the self-join
-    # scans) — the linear-storage cost of sizing buckets without a
-    # window funnel (see _minhash_sized); the dropped metric is one
-    # count over the already-computed sizes frame, no second signature
-    # pass.
-    if max_bucket is None:
-        banded = materialize_once(_minhash_banded(docs, id_col, text_col))
-        if metrics_out is not None:
-            metrics_out["dropped_bands"] = 0
-    else:
-        raw, sizes = _minhash_sized(docs, id_col, text_col)
-        # r7: the sizing agg runs eagerly ONCE (materialized) and its
-        # dropped count decides the join: when no bucket exceeds the
-        # cap the filter join is an identity — skip it and the second
-        # full-frame materialization barrier outright (the common case;
-        # a healthy corpus has zero degenerate bands).  The capped path
-        # reads the STORED sizes, so the agg never runs twice.  sizes
-        # is one row per band_key, so the filter count IS the distinct
-        # dropped-bucket count.
-        sizes = materialize_once(sizes)
-        dropped = sizes.where(F.col("_n") > max_bucket).count()
-        if metrics_out is not None:
-            metrics_out["dropped_bands"] = dropped
-        if dropped == 0:
-            banded = raw
-        else:
-            banded = materialize_once(
-                raw.join(sizes.where(F.col("_n") <= max_bucket),
-                         "band_key")
-                .drop("_n"))
+    # the signature map dominates the dedup stage, so that doubles it
+    banded, dropped = cap_blocks(_minhash_banded(docs, id_col, text_col),
+                                 ["band_key"], max_bucket)
+    if metrics_out is not None:
+        metrics_out["dropped_bands"] = dropped
     a, b = banded.alias("a"), banded.alias("b")
     return (a.join(b, "band_key")
             .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
             .select(F.col(f"a.{id_col}").alias("doc_a"),
                     F.col(f"b.{id_col}").alias("doc_b"))
             .distinct())
-
-
-def minhash_dropped_bands(docs: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text",
-                          max_bucket: int = DEFAULT_MAX_BAND_BUCKET
-                          ) -> int:
-    """How many band buckets the cap skipped (metrics, not silent).
-
-    Metric-only path; reads the generator's own band construction
-    (``_minhash_banded``) and aggregates with the same
-    map-side-combining groupBy the generator uses (since r6 the
-    generator sizes buckets this way too — no window funnel on either
-    path).  When you also need the pairs, pass ``metrics_out`` to
-    :func:`minhash_band_pairs` instead — that derives this count from
-    the generator's own sizes frame without re-running signatures."""
-    banded = _minhash_banded(docs, id_col, text_col)
-    return (banded.groupBy("band_key").count()
-            .where(F.col("count") > max_bucket).count())
 
 
 def simhash16(text_col) -> Column:
@@ -287,19 +220,6 @@ def _jaccard_blocked(docs: DataFrame, block_cols, tc_bucket):
     return base, list(block_cols) + ["_bkt"]
 
 
-def _jaccard_sized(docs: DataFrame, block_cols, tc_bucket):
-    """(base MATERIALIZED, per-block sizes, block key cols): the single
-    block construction the pair generator and the dropped metric both
-    read.  Sizes come from a map-side-combining groupBy over the block
-    key, not a window — a window colocates a degenerate block's every
-    row on one task before the cap can drop it (see _minhash_sized for
-    the full rationale; same r6 fix)."""
-    base, key_cols = _jaccard_blocked(docs, block_cols, tc_bucket)
-    base = materialize_once(base)
-    sizes = base.groupBy(*key_cols).agg(F.count("*").alias("_n"))
-    return base, sizes, key_cols
-
-
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
                         block_cols=("lang",),
                         tc_bucket: int | None = None,
@@ -316,42 +236,18 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
     never precision.
 
     Blocks larger than ``max_block`` are dropped before the self-join
-    (the same cap-and-count discipline as minhash_band_pairs /
-    linking.lsh_candidate_pairs): one degenerate (lang, token-count)
-    key over millions of boilerplate docs must not emit O(block^2)
-    pairs.  A dropped block's docs are excluded from both join sides
+    (:func:`~ollie_spark.spark.materialize.cap_blocks`, as in
+    minhash_band_pairs): one degenerate (lang, token-count) key over
+    millions of boilerplate docs must not emit O(block^2) pairs.  A dropped block's docs are excluded from both join sides
     (in bucketed mode they neither anchor nor probe), so candidates
     stay <= 3 * max_block per surviving probe row.  Pass
     ``metrics_out`` to receive ``dropped_blocks`` counted off the same
-    materialized sized frame the join reads (one tokenization serves
-    pairs + metric; standalone ``ngram_dropped_blocks`` re-tokenizes
-    and exists for metric-only callers)."""
-    # one tokenization/source-scan for both join sides AND the metric
-    # (see minhash_band_pairs): the capped path materializes the
-    # blocked frame once for the sizing agg + join, then the capped
-    # frame the self-join scans; the dropped metric is one count over
-    # the sizes frame (no second tokenization)
-    if max_block is None:
-        base, key_cols = _jaccard_blocked(docs, block_cols, tc_bucket)
-        base = materialize_once(base)
-        if metrics_out is not None:
-            metrics_out["dropped_blocks"] = 0
-    else:
-        raw, sizes, key_cols = _jaccard_sized(docs, block_cols, tc_bucket)
-        # r7: eager materialized sizing + identity-join skip when no
-        # block exceeds the cap (see minhash_band_pairs — same flow);
-        # sizes is one row per block key, so the filter count IS the
-        # distinct dropped-block count
-        sizes = materialize_once(sizes)
-        dropped = sizes.where(F.col("_n") > max_block).count()
-        if metrics_out is not None:
-            metrics_out["dropped_blocks"] = dropped
-        if dropped == 0:
-            base = raw
-        else:
-            base = materialize_once(
-                raw.join(sizes.where(F.col("_n") <= max_block), key_cols)
-                .drop("_n"))
+    materialized blocked frame the join reads (one tokenization serves
+    pairs + metric)."""
+    base, key_cols = _jaccard_blocked(docs, block_cols, tc_bucket)
+    base, dropped = cap_blocks(base, key_cols, max_block)
+    if metrics_out is not None:
+        metrics_out["dropped_blocks"] = dropped
     if tc_bucket is None:
         a, b = base.alias("a"), base.alias("b")
         cond = (F.col("a.tc") == F.col("b.tc")) \
@@ -374,22 +270,6 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8,
                    F.col("b.doc_id").alias("doc_b"),
                    F.round(jac, 4).alias("jaccard")))
     return out.distinct() if tc_bucket is not None else out
-
-
-def ngram_dropped_blocks(docs: DataFrame, block_cols=("lang",),
-                         tc_bucket: int | None = None,
-                         max_block: int = DEFAULT_MAX_JACCARD_BLOCK
-                         ) -> int:
-    """How many Jaccard blocks the cap skipped (metrics, not silent).
-
-    Metric-only path over the generator's own block construction
-    (``_jaccard_blocked``), aggregated with the same
-    map-side-combining groupBy the generator's sizing uses (r6); when
-    you also need the pairs, pass ``metrics_out`` to
-    :func:`ngram_jaccard_pairs` instead."""
-    base, key_cols = _jaccard_blocked(docs, block_cols, tc_bucket)
-    return (base.groupBy(*key_cols).count()
-            .where(F.col("count") > max_block).count())
 
 
 def text_quality(docs: DataFrame) -> DataFrame:
@@ -549,15 +429,6 @@ def token_counts_from_words(words) -> tuple:
         lambda acc, w: acc + F.floor((F.length(w) + 3) / 4).cast("long"))
     return F.size(words).cast("long").alias("ws_tokens"), \
         sub.alias("subword_tokens")
-
-
-def token_counts(text_col):
-    """(whitespace tokens, BPE-ish subword estimate) columns.
-
-    Single-projection form — both counts re-run the embedded split;
-    prefer projecting ``F.split(...)`` once and using
-    :func:`token_counts_from_words` in per-row hot paths."""
-    return token_counts_from_words(F.split(text_col, " "))
 
 
 def doc_fingerprint(text_col, gram: int = 5) -> Column:
@@ -1384,7 +1255,7 @@ def line_dedup(docs: DataFrame, id_col: str = "doc_id",
              .select(id_col, F.posexplode(F.split(F.col(text_col), "\n"))
                      .alias("_ln", "_line")))
     # BOTH the frequency agg and the join-back read the exploded
-    # frame — materialize it once (the _minhash_sized discipline) so
+    # frame — materialize it once (the cap_blocks discipline) so
     # the corpus split/explode doesn't run twice
     keyed = materialize_once(lines.select(
         id_col, "_ln", "_line", F.md5(F.trim(F.col("_line"))).alias("_k")))
@@ -1474,7 +1345,6 @@ def leakage_safe_split(docs: DataFrame, id_col: str = "doc_id",
                        fractions=SPLIT_FRACTIONS,
                        max_bucket: int = DEFAULT_MAX_BAND_BUCKET,
                        cc_local_threshold: int = 1_000_000,
-                       cc_algorithm: str = "min_label",
                        cc_max_iter: int = 15,
                        metrics_out: dict | None = None) -> DataFrame:
     """Deterministic train/val/test assignment in which a near-dup
@@ -1507,11 +1377,11 @@ def leakage_safe_split(docs: DataFrame, id_col: str = "doc_id",
       ``metrics_out`` to read ``dropped_bands`` — never silent; in a
       real funnel exact dedup (q30 stage 4) removes such
       byte-identical shapes before splitting.
-    - the default ``min_label`` CC converges in O(graph diameter)
-      rounds; a >``cc_max_iter``-diameter drift chain on the
-      distributed path warns and may split a component.  Pass
-      ``cc_algorithm="star"`` (O(log n) rounds regardless of
-      diameter) for adversarially chain-shaped corpora."""
+    - the distributed min-label CC converges in O(graph diameter)
+      rounds; a >``cc_max_iter``-diameter drift chain on that path
+      warns and may split a component — raise ``cc_max_iter``, or keep
+      the pair set under ``cc_local_threshold`` so the driver-side
+      union-find (diameter-independent) resolves it."""
     from ollie_spark.spark.linking import connected_components
 
     def pad(c):
@@ -1524,8 +1394,7 @@ def leakage_safe_split(docs: DataFrame, id_col: str = "doc_id",
         pairs.select(pad(F.col("doc_a")).alias("norm_a"),
                      pad(F.col("doc_b")).alias("norm_b")),
         docs.select(pad(F.col(id_col)).alias("norm")),
-        local_threshold=cc_local_threshold,
-        algorithm=cc_algorithm, max_iter=cc_max_iter)
+        local_threshold=cc_local_threshold, max_iter=cc_max_iter)
     # two-step projection: the hash lands as an aliased column and the
     # CASE chain references it as a column ref — inlining it would
     # re-evaluate the md5 once per WHEN branch (the q23 trap)

@@ -31,7 +31,7 @@ def main():
     from ollie_spark.spark.linking import (_lsh_banded, normalize_entity,
                                            connected_components,
                                            lsh_candidate_pairs)
-    from ollie_spark.spark.materialize import materialize_once
+    from ollie_spark.spark.materialize import cap_blocks, materialize_once
 
     t = {}
 
@@ -59,14 +59,11 @@ def main():
     # expression analysis/codegen + one localCheckpoint)
     banded = clock("banded_checkpoint",
                    lambda: materialize_once(_lsh_banded(entities, 16, 8)))
-    # stage 2: sizes agg + metric count
-    sizes = banded.groupBy("band_key").agg(F.count("*").alias("bucket_n"))
-    clock("sizes_metric_count",
-          lambda: sizes.where(F.col("bucket_n") > 64).count())
-    # stage 3: kept materialization
-    kept = clock("kept_checkpoint", lambda: materialize_once(
-        banded.join(sizes.where(F.col("bucket_n") <= 64), "band_key")
-        .drop("bucket_n")))
+    # stages 2-3: the cap step lsh_candidate_pairs runs (sizes agg,
+    # dropped count, kept frame); its own materialize_once re-stores
+    # the already-checkpointed band frame, a scan with no signature work
+    kept, _ = clock("cap_blocks",
+                    lambda: cap_blocks(banded, ["band_key"], 64))
     # stage 4: pair self-join + jaccard verify (count to materialize)
     from ollie_spark.spark.linking import _char3_jaccard
     a, b = kept.alias("a"), kept.alias("b")

@@ -79,20 +79,17 @@ def test_normalize_fused_regex_matches_legacy_chain(spark):
 
 
 def test_lsh_fused_metric_agrees_with_standalone(spark):
-    """r5 judge item 1: lsh_candidate_pairs' metrics_out dropped-bucket
-    count reads the generator's own materialized band frame and must
-    agree with the standalone dropped_buckets (which delegates to the
-    same _lsh_banded construction)."""
-    from ollie_spark.spark.linking import dropped_buckets
+    """lsh_candidate_pairs reports the exact dropped-bucket count in
+    metrics_out, counted off its own materialized band frame."""
     # 70 identical norms share every band bucket -> any cap < 70 drops
-    # all 8 bands' buckets; distinct entities keep theirs
+    # all 8 bands' buckets (one per band); distinct entities keep theirs
     ents = spark.createDataFrame(
         [("degenerate boilerplate entity",)] * 70
         + [(f"unique entity {i}",) for i in range(5)], "norm string")
     mo = {}
     pairs = lsh_candidate_pairs(ents, max_bucket=8, metrics_out=mo)
     pairs.count()
-    assert mo["dropped_buckets"] == dropped_buckets(ents, max_bucket=8) > 0
+    assert mo["dropped_buckets"] == 8
     mo2 = {}
     lsh_candidate_pairs(ents, max_bucket=1000, metrics_out=mo2).count()
     assert mo2["dropped_buckets"] == 0
@@ -173,39 +170,29 @@ def test_frame_sig_probe_detects_label_change(spark):
                       ("norm", "component")) != sig
 
 
-def test_star_components_agree_with_min_label(spark):
-    """Property: large-star/small-star and min-label produce the same
-    partition into components on random graphs (including a long chain,
-    where min-label needs O(diameter) rounds and star O(log n))."""
-    import random
-    rng = random.Random(1234)
-    for trial in range(4):
-        n = 30
-        names = [f"v{i:02d}" for i in range(n)]
-        edges = {tuple(sorted(rng.sample(names, 2))) for _ in range(25)}
-        if trial == 3:  # adversarial chain: diameter n-1
-            edges = {(names[i], names[i + 1]) for i in range(n - 1)}
-        pairs = spark.createDataFrame(
-            sorted(edges), "norm_a string, norm_b string")
-        verts = spark.createDataFrame([(x,) for x in names], "norm string")
-        # force the distributed paths (local_threshold=0)
-        ml = connected_components(pairs, verts, max_iter=40,
-                                  local_threshold=0,
-                                  algorithm="min_label")
-        st = connected_components(pairs, verts, local_threshold=0,
-                                  algorithm="star")
-        def groups(df):
-            out = {}
-            for r in df.collect():
-                out.setdefault(r.component, set()).add(r.norm)
-            return {frozenset(v) for v in out.values()}
-        assert groups(ml) == groups(st), f"trial {trial}"
+def test_min_label_agrees_with_union_find_on_chain(spark):
+    """Adversarial chain (diameter n-1): the distributed min-label loop
+    needs O(diameter) rounds, and with enough of them it must label
+    every vertex exactly as the driver-side union-find hatch does."""
+    n = 30
+    names = [f"v{i:02d}" for i in range(n)]
+    pairs = spark.createDataFrame(
+        [(names[i], names[i + 1]) for i in range(n - 1)],
+        "norm_a string, norm_b string")
+    verts = spark.createDataFrame([(x,) for x in names], "norm string")
+
+    def labels(df):
+        return {r.norm: r.component for r in df.collect()}
+
+    ml = connected_components(pairs, verts, max_iter=40, local_threshold=0)
+    uf = connected_components(pairs, verts)             # escape hatch
+    assert labels(ml) == labels(uf) == {x: "v00" for x in names}
 
 
 def test_union_find_escape_hatch_agrees_with_distributed(spark):
     """The driver-side union-find (small-graph escape hatch) must
-    produce the same partition into components as both distributed
-    algorithms on random graphs — the three code paths are
+    produce the same partition into components as the distributed
+    min-label loop on random graphs — the two code paths are
     interchangeable by size threshold, so they must agree."""
     import random
     rng = random.Random(777)
@@ -225,11 +212,8 @@ def test_union_find_escape_hatch_agrees_with_distributed(spark):
         verts = spark.createDataFrame([(x,) for x in names], "norm string")
         uf = connected_components(pairs, verts)            # escape hatch
         ml = connected_components(pairs, verts, max_iter=40,
-                                  local_threshold=0,
-                                  algorithm="min_label")
-        st = connected_components(pairs, verts, local_threshold=0,
-                                  algorithm="star")
-        assert groups(uf) == groups(ml) == groups(st), f"trial {trial}"
+                                  local_threshold=0)
+        assert groups(uf) == groups(ml), f"trial {trial}"
 
 
 def test_min_label_warns_on_exhaustion(spark):
@@ -242,8 +226,8 @@ def test_min_label_warns_on_exhaustion(spark):
     verts = spark.createDataFrame([(x,) for x in names], "norm string")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        connected_components(pairs, verts, max_iter=2, local_threshold=0,
-                             algorithm="min_label").collect()
+        connected_components(pairs, verts, max_iter=2,
+                             local_threshold=0).collect()
     assert any("max_iter" in str(x.message) for x in w)
 
 
@@ -690,3 +674,20 @@ def test_local_blocking_short_and_colliding_norms(spark):
                  for r in edges.collect()})
 
     assert run(10_000) == run(0)
+
+
+def test_canonicalize_empty_mentions(spark):
+    """Empty, correctly typed mentions give empty linked/nodes/edges
+    with the same schemas on the driver hatch (default threshold: 0
+    norms) and the forced distributed path (-1; 0 would still take the
+    hatch with 0 norms) — the schemas a non-empty input gets."""
+    schema = ("doc_id string, span_idx int, arg1_text string, "
+              "rel_text string, arg2_text string, conf double")
+    empty = spark.createDataFrame([], schema)
+    one = spark.createDataFrame(
+        [("d0", 0, "Acme Corp", "owns", "Widget Co", 0.9)], schema)
+    want = [f.schema for f in canonicalize(one)]
+    for threshold in (2_000, -1):
+        outs = canonicalize(empty, local_blocking_threshold=threshold)
+        assert [f.count() for f in outs] == [0, 0, 0], threshold
+        assert [f.schema for f in outs] == want, threshold

@@ -103,12 +103,14 @@ def test_pair_generator_sizing_carries_no_window(spark, monkeypatch):
     band key — a window colocates EVERY row of the most degenerate
     bucket on one task before the cap can drop it, exactly the failure
     the cap exists to prevent.  materialize_once is stubbed to identity
-    so the checkpoint cannot hide the sizing stage from the plan."""
+    inside materialize.cap_blocks (the one cap flow all three
+    generators call) so the checkpoint cannot hide the sizing stage
+    from the plan."""
     import ollie_spark.spark.linking as linking
+    import ollie_spark.spark.materialize as materialize
     import ollie_spark.spark.textops as textops
 
-    monkeypatch.setattr(textops, "materialize_once", lambda df: df)
-    monkeypatch.setattr(linking, "materialize_once", lambda df: df)
+    monkeypatch.setattr(materialize, "materialize_once", lambda df: df)
 
     docs = spark.createDataFrame(
         [("d1", "en", "a b c d e f"), ("d2", "en", "a b c d e g")],

@@ -16,8 +16,7 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entry_mod
 from ollie_spark.spark.textops import (auto_cell_bits,
                                        embedding_neardup_pairs,
-                                       minhash_band_pairs,
-                                       minhash_dropped_bands, probe_cells,
+                                       minhash_band_pairs, probe_cells,
                                        sign_cell)
 
 
@@ -35,22 +34,22 @@ def test_degenerate_band_is_capped_and_counted(spark):
     uniq = [(f"u{i}", f"unique document number {i} with distinct words "
              f"alpha{i} beta{i} gamma{i} delta{i}") for i in range(5)]
     docs = _docs(spark, same + uniq)
-    capped = minhash_band_pairs(docs, max_bucket=16)
+    mo = {}
+    capped = minhash_band_pairs(docs, max_bucket=16, metrics_out=mo)
     assert capped.count() == 0
-    assert minhash_dropped_bands(docs, max_bucket=16) > 0
+    # both bands of the identical docs share one bucket each
+    assert mo["dropped_bands"] == 2
     # and the cap is observable as *absent* without the degenerate key
     uncapped = minhash_band_pairs(docs, max_bucket=None)
     assert uncapped.count() == 780
 
 
 def test_fused_metrics_agree_with_standalone(spark):
-    """r5 judge item 1: the pair generators expose the dropped-bucket/
-    block metric via metrics_out, derived from the generator's OWN
-    materialized sized frame — it must agree with the standalone
-    metric functions (which delegate to the same band/block
-    construction) on both firing and non-firing corpora."""
-    from ollie_spark.spark.textops import (ngram_dropped_blocks,
-                                           ngram_jaccard_pairs)
+    """The pair generators report the dropped-bucket/block metric via
+    metrics_out with the exact count, on both firing and non-firing
+    corpora: 40 identical docs fill one bucket per band (2 bands) and
+    one (lang, token-count) block, in both blocking modes."""
+    from ollie_spark.spark.textops import ngram_jaccard_pairs
     same = [(f"d{i:03d}", "lorem ipsum dolor sit amet consectetur "
              "adipiscing elit sed do eiusmod") for i in range(40)]
     uniq = [(f"u{i}", f"unique document number {i} with distinct words "
@@ -59,8 +58,7 @@ def test_fused_metrics_agree_with_standalone(spark):
     mo = {}
     assert minhash_band_pairs(docs, max_bucket=16,
                               metrics_out=mo).count() == 0
-    assert mo["dropped_bands"] == minhash_dropped_bands(
-        docs, max_bucket=16) > 0
+    assert mo["dropped_bands"] == 2
     mo2 = {}
     minhash_band_pairs(docs, max_bucket=None, metrics_out=mo2).count()
     assert mo2["dropped_bands"] == 0
@@ -72,8 +70,7 @@ def test_fused_metrics_agree_with_standalone(spark):
         mo3 = {}
         ngram_jaccard_pairs(jdocs, threshold=0.5, max_block=16,
                             tc_bucket=tc_bucket, metrics_out=mo3).count()
-        assert mo3["dropped_blocks"] == ngram_dropped_blocks(
-            jdocs, max_block=16, tc_bucket=tc_bucket) == 1
+        assert mo3["dropped_blocks"] == 1
 
 
 def test_default_cap_preserves_small_scale_pairs(spark):
@@ -82,9 +79,34 @@ def test_default_cap_preserves_small_scale_pairs(spark):
             ("a2", "the quick brown fox jumps over the lazy dog today"),
             ("b1", "completely different text about spark partitions")]
     docs = _docs(spark, rows)
-    assert ({(r.doc_a, r.doc_b) for r in minhash_band_pairs(docs).collect()}
+    mo = {}
+    assert ({(r.doc_a, r.doc_b)
+             for r in minhash_band_pairs(docs, metrics_out=mo).collect()}
             == {("a1", "a2")})
-    assert minhash_dropped_bands(docs) == 0
+    assert mo["dropped_bands"] == 0
+
+
+def test_cap_blocks_drops_and_counts_whole_keys(spark):
+    """materialize.cap_blocks, the cap step of every pair generator:
+    under the cap the materialized frame comes back as-is (no join in
+    its plan); over the cap every row of an oversized key is removed
+    and the key counted once; cap=None never drops."""
+    from ollie_spark.spark.materialize import cap_blocks
+    rows = [("hot", i) for i in range(5)] + [("cold", 0), ("warm", 1),
+                                             ("warm", 2)]
+    df = spark.createDataFrame(rows, "k string, v int")
+
+    kept, dropped = cap_blocks(df, ["k"], 5)
+    assert dropped == 0 and kept.count() == 8
+    assert "Join" not in kept._jdf.queryExecution().executedPlan().toString()
+
+    kept, dropped = cap_blocks(df, ["k"], 2)
+    assert dropped == 1
+    assert sorted(map(tuple, kept.select("k", "v").collect())) == [
+        ("cold", 0), ("warm", 1), ("warm", 2)]
+
+    kept, dropped = cap_blocks(df, ["k"], None)
+    assert dropped == 0 and kept.count() == 8
 
 
 # --------------------------------------------------- cell bit scaling
@@ -200,8 +222,7 @@ def test_degenerate_jaccard_block_is_capped_and_counted(spark):
     # 30 same-lang docs with IDENTICAL token counts share one (lang, tc)
     # block -> uncapped self-join would emit 30*29/2 = 435 pairs; a cap
     # below 30 drops the block and the drop is counted, never silent.
-    from ollie_spark.spark.textops import (ngram_dropped_blocks,
-                                           ngram_jaccard_pairs)
+    from ollie_spark.spark.textops import ngram_jaccard_pairs
     same = [(f"d{i:03d}", "en",
              "lorem ipsum dolor sit amet consectetur adipiscing elit")
             for i in range(30)]
@@ -209,20 +230,23 @@ def test_degenerate_jaccard_block_is_capped_and_counted(spark):
             ("u2", "en", "short text here")]
     docs = spark.createDataFrame(
         same + uniq, "doc_id string, lang string, text string")
-    capped = ngram_jaccard_pairs(docs, threshold=0.5, max_block=16)
+    mo = {}
+    capped = ngram_jaccard_pairs(docs, threshold=0.5, max_block=16,
+                                 metrics_out=mo)
     # the degenerate block is gone; the small block still pairs
     assert ({(r.doc_a, r.doc_b) for r in capped.collect()}
             == {("u1", "u2")})
-    assert ngram_dropped_blocks(docs, max_block=16) == 1
+    assert mo["dropped_blocks"] == 1
     # cap observable as absent: uncapped emits the full quadratic set
     uncapped = ngram_jaccard_pairs(docs, threshold=0.5, max_block=None)
     assert uncapped.count() == 435 + 1
     # the bucketed path honors the same cap (anchor + probe excluded)
+    mo = {}
     bcapped = ngram_jaccard_pairs(docs, threshold=0.5, max_block=16,
-                                  tc_bucket=4)
+                                  tc_bucket=4, metrics_out=mo)
     assert ({(r.doc_a, r.doc_b) for r in bcapped.collect()}
             == {("u1", "u2")})
-    assert ngram_dropped_blocks(docs, max_block=16, tc_bucket=4) == 1
+    assert mo["dropped_blocks"] == 1
 
 
 def test_ngram_jaccard_tc_bucket_recovers_count_drift(spark):
@@ -772,8 +796,9 @@ def test_corpus_dedup_plans_carry_no_window(spark):
     """line_dedup / duplicate_span_stats count their (skewed) line and
     span keys with map-side-combining groupBys — a Window over the key
     would colocate every occurrence of the degenerate boilerplate line
-    on one task (the r6 _minhash_sized fix class).  The oracles DO
-    spell windows (DuckDB runs at oracle scale); Spark must not."""
+    on one task (the funnel materialize.cap_blocks also avoids).  The
+    oracles DO spell windows (DuckDB runs at oracle scale); Spark must
+    not."""
     from ollie_spark.spark.textops import (duplicate_span_stats, line_dedup,
                                            plant_boilerplate)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -914,17 +939,6 @@ def test_leakage_split_cap_hole_is_observable(spark):
     full = leakage_safe_split(docs, metrics_out=mo2)
     assert mo2["dropped_bands"] == 0
     assert {r.rep_id for r in full.collect()} == {0}
-
-
-def test_leakage_split_star_cc_equivalence(spark):
-    """cc_algorithm='star' (O(log n) rounds, the adversarial-chain
-    path) must produce the identical assignment."""
-    from ollie_spark.spark.textops import leakage_safe_split
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    base = sorted(map(tuple, leakage_safe_split(docs).collect()))
-    star = sorted(map(tuple, leakage_safe_split(
-        docs, cc_local_threshold=0, cc_algorithm="star").collect()))
-    assert base == star
 
 
 def test_curation_to_training_pipeline_end_to_end(spark):
