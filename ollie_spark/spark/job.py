@@ -24,8 +24,7 @@ from .pipeline import run_extraction
 
 
 def build_graph(spark: SparkSession, documents: DataFrame, root: str,
-                n_buckets: int = 16, conf_threshold: float = 0.0,
-                salt: int = 8) -> dict:
+                n_buckets: int = 16, conf_threshold: float = 0.0) -> dict:
     """Run every stage, resuming any stage whose manifest is partial.
 
     Returns per-stage metrics: {stage: {buckets, rows, wall_ms,
@@ -51,7 +50,7 @@ def build_graph(spark: SparkSession, documents: DataFrame, root: str,
     link_split: dict = {}
     link_caches: list = []
     t0 = _time.monotonic()
-    linked, nodes, edges = canonicalize(mentions_t, salt=salt,
+    linked, nodes, edges = canonicalize(mentions_t,
                                         metrics_out=link_split,
                                         caches_out=link_caches)
     metrics["link"] = {

@@ -19,6 +19,10 @@ Scale notes (100 TB / 10^12 docs):
   min-root union-find; larger ones run min-label propagation — O(graph
   diameter) join+agg rounds, tiny for shallow star-like near-dup
   blocks, with a loud warning if max_iter exhausts.
+- Batch (`canonicalize`) and incremental (`incremental_link`) linking
+  share each step: `_annotate` (normalize), `_cluster` (driver hatch
+  or LSH + CC), `cap_blocks` and `_attach`; every band frame is built
+  with the module constants `NUM_HASHES`/`BANDS`.
 - The final mentions->canonical join salts the canonical map S ways and
   hashes mentions into the same salt space: mention skew spreads over S
   reducers while the map side only replicates S×.  AQE skew-join stays
@@ -39,6 +43,13 @@ from ollie_spark.spark.materialize import cap_blocks, materialize_once
 
 DETERMINERS = ("the", "a", "an", "this", "that", "these", "those", "some",
                "any", "each", "every", "its", "his", "her", "their", "our")
+
+# MinHash/LSH blocking config (like textops.MINHASH_SEEDS): band frames
+# built with other values would never share a band key
+NUM_HASHES = 16
+BANDS = 8
+JACCARD_THRESHOLD = 0.5            # char-3-gram pair verification
+LOCAL_BLOCKING_THRESHOLD = 2_000   # distinct norms; see _cluster
 
 
 def normalize_entity(col):
@@ -74,8 +85,7 @@ def entity_mentions(mentions: DataFrame) -> DataFrame:
     return sides[0].unionByName(sides[1]).where(F.col("norm") != "")
 
 
-def minhash_signature(df: DataFrame, col: str = "norm",
-                      num_hashes: int = 16) -> DataFrame:
+def minhash_signature(df: DataFrame, col: str = "norm") -> DataFrame:
     """Add ``sig: array<bigint>`` — MinHash over char 3-gram shingles.
 
     All map-side: shingling via transform(sequence(...)), each signature
@@ -89,11 +99,11 @@ def minhash_signature(df: DataFrame, col: str = "norm",
                     lambda i: c.substr(i, F.lit(3))))
     df = df.withColumn("_shingles", F.array_distinct(shingles))
 
-    # ONE aggregate pass computes all num_hashes signature slots: the
+    # ONE aggregate pass computes all NUM_HASHES signature slots: the
     # accumulator is the running per-seed minimum array, each element
-    # contributes its num_hashes seeded hashes via zip_with/least.
+    # contributes its NUM_HASHES seeded hashes via zip_with/least.
     # Identical values to the per-seed array_min(transform(...)) form,
-    # but a single expression tree instead of num_hashes of them —
+    # but a single expression tree instead of NUM_HASHES of them —
     # the per-seed forest cost ~83s of cold Catalyst/codegen work per
     # session (9.5s warm, data-independent) on the 16-hash default.
     # NB: lambdas must take exactly the declared parameter count —
@@ -101,34 +111,33 @@ def minhash_signature(df: DataFrame, col: str = "norm",
     # (elem, index) to 2-param lambdas), hence no default-arg seeds.
     long_max = (1 << 63) - 1
     init = F.array(*[F.lit(long_max).cast("long")
-                     for _ in range(num_hashes)])
+                     for _ in range(NUM_HASHES)])
     sig = F.aggregate(
         "_shingles", init,
         lambda acc, x: F.zip_with(
             acc,
-            F.array(*[F.xxhash64(x, F.lit(s)) for s in range(num_hashes)]),
+            F.array(*[F.xxhash64(x, F.lit(s)) for s in range(NUM_HASHES)]),
             lambda a, h: F.least(a, h)))
     return df.withColumn("sig", sig).drop("_shingles")
 
 
-def _lsh_banded(entities: DataFrame, num_hashes: int,
-                bands: int) -> DataFrame:
+def _lsh_banded(entities: DataFrame) -> DataFrame:
     """(norm, band_key): minhash signatures banded — the SINGLE band
     construction the pair generator, band_entities and incremental_link
     read."""
-    rows = num_hashes // bands
-    sigs = minhash_signature(entities.select("norm"), num_hashes=num_hashes)
+    rows = NUM_HASHES // BANDS
+    sigs = minhash_signature(entities.select("norm"))
     return sigs.select(
         "norm",
         F.explode(F.array(*[
             F.xxhash64(F.concat_ws(
                 ",", *[F.element_at("sig", b * rows + r + 1).cast("string")
                        for r in range(rows)]), F.lit(b))
-            for b in range(bands)])).alias("band_key"))
+            for b in range(BANDS)])).alias("band_key"))
 
 
-def lsh_candidate_pairs(entities: DataFrame, num_hashes: int = 16,
-                        bands: int = 8, jaccard_threshold: float = 0.5,
+def lsh_candidate_pairs(entities: DataFrame,
+                        jaccard_threshold: float = JACCARD_THRESHOLD,
                         max_bucket: int = 64,
                         metrics_out: dict | None = None) -> DataFrame:
     """(norm_a, norm_b) near-duplicate candidates, verified by token
@@ -139,8 +148,8 @@ def lsh_candidate_pairs(entities: DataFrame, num_hashes: int = 16,
     :func:`~ollie_spark.spark.materialize.cap_blocks`).  Both self-join
     sides and the sizing read one materialized band frame, so pairs +
     metric cost one signature computation."""
-    kept, dropped = cap_blocks(_lsh_banded(entities, num_hashes, bands),
-                               ["band_key"], max_bucket)
+    kept, dropped = cap_blocks(_lsh_banded(entities), ["band_key"],
+                               max_bucket)
     if metrics_out is not None:
         metrics_out["dropped_buckets"] = dropped
     a = kept.alias("a")
@@ -177,15 +186,13 @@ def _char3_jaccard(a: str, b: str):
             / F.size(F.array_union(ga, gb)))
 
 
-def band_entities(entities: DataFrame, num_hashes: int = 16,
-                  bands: int = 8) -> DataFrame:
+def band_entities(entities: DataFrame) -> DataFrame:
     """Public (norm, band_key) band frame — the incremental-linking
     amortization handle: band the canonical map once, keep it
     persisted across increments, extend it with the delta's bands
     (`band_entities(delta_map)`) instead of re-banding the whole map
     per batch.  Delegates to the single shared band construction."""
-    return _lsh_banded(entities.select("norm").distinct(),
-                       num_hashes, bands)
+    return _lsh_banded(entities.select("norm").distinct())
 
 
 def _frame_sig(df: DataFrame, cols) -> tuple:
@@ -353,10 +360,7 @@ def connected_components(pairs: DataFrame, vertices: DataFrame,
     return labels.unionByName(isolated)
 
 
-def _local_blocking_components(norms, num_hashes: int = 16,
-                               bands: int = 8,
-                               jaccard_threshold: float = 0.5,
-                               max_bucket: int = 64):
+def _local_blocking_components(norms, max_bucket: int):
     """Driver-side replica of lsh_candidate_pairs + connected_components
     over a small distinct-norm list -> ([(norm, component)], dropped).
 
@@ -372,16 +376,16 @@ def _local_blocking_components(norms, num_hashes: int = 16,
     Equivalence on real corpus norms is pinned by
     test_linking.test_local_blocking_matches_distributed.
 
-    Cost model: ~(len(norm) shingles x (1 byte-hash + num_hashes int
-    finalizers)) per norm in pure python — ~0.5 ms/norm at the default
-    16 hashes, so the default canonicalize threshold (2,000 norms,
-    ~1 s single-core, a few hundred KB of driver memory) stays well
-    under the distributed path's ~5 s of fixed job overhead."""
+    Cost model: ~(len(norm) shingles x (1 byte-hash + NUM_HASHES int
+    finalizers)) per norm in pure python — ~0.5 ms/norm at 16 hashes,
+    so LOCAL_BLOCKING_THRESHOLD (2,000 norms, ~1 s single-core, a few
+    hundred KB of driver memory) stays well under the distributed
+    path's ~5 s of fixed job overhead."""
     from collections import defaultdict
 
     from .xxh64 import hash_bytes, hash_int, SPARK_SEED
 
-    rows_per = num_hashes // bands
+    rows_per = NUM_HASHES // BANDS
 
     def signed(h):
         return h - (1 << 64) if h >= (1 << 63) else h
@@ -398,14 +402,14 @@ def _local_blocking_components(norms, num_hashes: int = 16,
         gram_cache[norm] = sh
         # xxhash64(shingle, seed) chains: bytes-hash once per shingle,
         # then one int finalizer per seed
-        sig = [None] * num_hashes
+        sig = [None] * NUM_HASHES
         for g in sh:
             hb = hash_bytes(g.encode("utf-8"), SPARK_SEED)
-            for s in range(num_hashes):
+            for s in range(NUM_HASHES):
                 v = signed(hash_int(s, hb))
                 if sig[s] is None or v < sig[s]:
                     sig[s] = v
-        for b in range(bands):
+        for b in range(BANDS):
             key = ",".join(str(sig[b * rows_per + r])
                            for r in range(rows_per))
             bk = hash_int(b, hash_bytes(key.encode("utf-8"), SPARK_SEED))
@@ -424,7 +428,7 @@ def _local_blocking_components(norms, num_hashes: int = 16,
 
     def verified(a, b):
         ga, gb = gram_cache[a], gram_cache[b]
-        return len(ga & gb) / len(ga | gb) >= jaccard_threshold
+        return len(ga & gb) / len(ga | gb) >= JACCARD_THRESHOLD
 
     roots = _union_find((a, b) for a, b in cand if verified(a, b))
     return [(n, roots.get(n, n)) for n in norms], dropped
@@ -454,17 +458,68 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
     return joined if keep_salt else joined.drop("_salt")
 
 
-def canonicalize(mentions: DataFrame, num_hashes: int = 16,
-                 bands: int = 8, salt: int = 8,
+def _annotate(mentions: DataFrame) -> DataFrame:
+    """``mentions`` + normalized ``_a1``/``_a2`` argument columns, the
+    front end both canonicalize and incremental_link materialize once.
+
+    Materialize: a filter or join key on an aliased computed column is
+    pushed through the projection and re-inlined (PushDownPredicate —
+    the Catalyst CSE trap, CLAUDE.md), so without a barrier the
+    4-regex normalize chain re-ran per consumer (counts rollup, link
+    join, edges rollup: 21s + 17s + 17s at 480k docs / 16 cores, vs
+    ~10s for the one materialized pass).
+
+    Coalesce (r7): extraction hands over cores*4 partitions, and every
+    consumer of the stored frame would schedule that many mostly-empty
+    tasks per job.  coalesce to defaultParallelism (shuffle-free, a
+    no-op when there are fewer partitions, so a big cluster keeps its
+    parallelism) halved the canonicalize wall at sandbox scale
+    (interleaved A/B: 4.4-8.6 -> 2.2-3.2 s, identical outputs)."""
+    cores = mentions.sparkSession.sparkContext.defaultParallelism
+    return (mentions.coalesce(max(int(cores), 1))
+            .withColumn("_a1", normalize_entity(F.col("arg1_text")))
+            .withColumn("_a2", normalize_entity(F.col("arg2_text"))))
+
+
+def _cluster(entities: DataFrame, n_entities: int,
+             local_threshold: int = LOCAL_BLOCKING_THRESHOLD,
+             max_bucket: int = 64,
+             metrics_out: dict | None = None) -> DataFrame:
+    """(norm, component) for every norm of ``entities`` (``n_entities``
+    distinct norms) — the one clustering step of canonicalize and of
+    incremental_link's novel tier; ``metrics_out`` receives
+    ``dropped_buckets`` on both paths.
+
+    At or below ``local_threshold`` norms (r7 escape hatch) banding,
+    cap, candidate pairs, Jaccard verification AND connected
+    components resolve driver-side in one collect, value-identical to
+    the distributed path (see _local_blocking_components); ~1 s and a
+    few hundred KB at 2,000 norms.  Above it: lsh_candidate_pairs +
+    connected_components, plan-pinned by tests/test_plans.py."""
+    if n_entities <= local_threshold:
+        norms = [r.norm for r in entities.collect()]
+        comp_rows, dropped = _local_blocking_components(norms, max_bucket)
+        if metrics_out is not None:
+            metrics_out["dropped_buckets"] = dropped
+        return _components_frame(entities.sparkSession, comp_rows)
+    pairs = lsh_candidate_pairs(entities, max_bucket=max_bucket,
+                                metrics_out=metrics_out)
+    return connected_components(pairs, entities)
+
+
+def canonicalize(mentions: DataFrame, salt: int = 8,
                  broadcast_map_threshold: int = 1_000_000,
                  metrics_out: dict | None = None,
                  caches_out: list | None = None,
-                 local_blocking_threshold: int = 2_000):
+                 local_blocking_threshold: int = LOCAL_BLOCKING_THRESHOLD):
     """-> (linked_mentions, nodes, edges) DataFrames.
 
     nodes(node_id, canonical, aliases, mention_count)
     edges(src_node, rel, dst_node, weight, conf)
     linked mentions gain arg1_node / arg2_node columns.
+
+    Normalizes once (``_annotate``), clusters the distinct norms
+    (``_cluster``, driver hatch at <= ``local_blocking_threshold``).
 
     The mentions->canonical join picks its strategy from the map size
     (counted once off the persisted map):
@@ -496,32 +551,8 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
     """
     import time as _time
 
-    # annotate + MATERIALIZE the normalized argument columns ONCE: a
-    # filter or join key on an aliased computed column is pushed
-    # through the projection and re-inlined (PushDownPredicate — the
-    # Catalyst CSE trap, CLAUDE.md), so without a materialization
-    # barrier the 4-regex normalize chain ran 2-3x per row per
-    # consumer AND the counts rollup, the linked join, and the edges
-    # rollup each re-evaluated the whole normalization from scratch
-    # (measured 21s + 17s + 17s per evaluation at 480k docs / 16
-    # cores; the one materialized pass is ~10s and every downstream
-    # evaluation reads stored columns).
     t0 = _time.monotonic()
-    # partitioning of the stored normalized frame is CORES-derived
-    # (r7): extraction hands over cores*4 partitions (even-CPU-bound
-    # tasking is right for the python stage), but every downstream
-    # consumer of the checkpoint — the counts agg, the link join, the
-    # edges rollup — then schedules that many mostly-empty map tasks
-    # per job.  coalesce to defaultParallelism (shuffle-free merge,
-    # no-op when the input already has <= that many partitions, so a
-    # big cluster keeps its parallelism) halved the canonicalize wall
-    # at sandbox scale (interleaved A/B: 4.4-8.6 -> 2.2-3.2 s,
-    # identical outputs).
-    cores = mentions.sparkSession.sparkContext.defaultParallelism
-    m_ann = materialize_once(
-        mentions.coalesce(max(int(cores), 1))
-        .withColumn("_a1", normalize_entity(F.col("arg1_text")))
-        .withColumn("_a2", normalize_entity(F.col("arg2_text"))))
+    m_ann = materialize_once(_annotate(mentions))
     if caches_out is not None:
         caches_out.append(m_ann)
     if metrics_out is not None:
@@ -544,32 +575,11 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
               .agg(F.max_by("text", F.struct("count", "text"))
                    .alias("surface"),
                    F.sum("count").alias("n"))).persist()
-    entities = counts.select("norm")
     t0 = _time.monotonic()
-    # small-distinct-entity escape hatch (r7): below the threshold the
-    # whole blocking stage — banding, bucket sizing/cap, candidate
-    # self-join, Jaccard verification AND connected components —
-    # resolves driver-side in one collect, exactly like the union-find
-    # hatch inside connected_components (value-identical by the
-    # bit-exact xxhash64 replica; see _local_blocking_components).
-    # The distributed path below is unchanged, plan-pinned
-    # (tests/test_plans.py), and remains the path for real entity
-    # populations; the count that gates the switch also materializes
-    # the persisted counts frame, which the distributed path needs
-    # anyway.  Driver cost at the threshold: ~1 s and a few hundred KB
-    # (2,000 norms).
-    n_entities = counts.count()
-    if n_entities <= local_blocking_threshold:
-        norms = [r.norm for r in entities.collect()]
-        comp_rows, dropped = _local_blocking_components(
-            norms, num_hashes=num_hashes, bands=bands)
-        if metrics_out is not None:
-            metrics_out["dropped_buckets"] = dropped
-        comp = _components_frame(mentions.sparkSession, comp_rows)
-    else:
-        pairs = lsh_candidate_pairs(entities, num_hashes=num_hashes,
-                                    bands=bands, metrics_out=metrics_out)
-        comp = connected_components(pairs, entities)
+    # the count that picks _cluster's path also materializes the
+    # persisted counts frame, which both paths read
+    comp = _cluster(counts.select("norm"), counts.count(),
+                    local_blocking_threshold, metrics_out=metrics_out)
     if metrics_out is not None:
         metrics_out["lsh_cc_sec"] = round(_time.monotonic() - t0, 3)
 
@@ -601,14 +611,10 @@ def canonicalize(mentions: DataFrame, num_hashes: int = 16,
                   F.collect_set("norm").alias("aliases"),
                   F.sum("n").alias("mention_count")))
 
-    norm_to_node = canon.select("norm", "node_id")
-
-    # both link paths read the materialized normalized frame — no
+    # the link reads the materialized normalized frame — no
     # re-normalization, and the edges rollup's repeated evaluations of
     # `linked` scan stored columns instead of re-running the pipeline
-    m = m_ann
-
-    linked = _link_join(m, norm_to_node, n_map,
+    linked = _link_join(m_ann, canon.select("norm", "node_id"), n_map,
                         broadcast_map_threshold, salt)
 
     edges = (linked.groupBy(
@@ -636,11 +642,26 @@ def _link_join(m_ann: DataFrame, norm_to_node: DataFrame, n_map: int,
     return _fused_salted_link(m_ann, norm_to_node, salt=salt)
 
 
+def _attach(bands: DataFrame, ref_bands: DataFrame,
+            ref_map: DataFrame) -> DataFrame:
+    """(norm, node_id): the attach rule both incremental hops apply.  A
+    norm of ``bands`` attaches to a ``ref_bands`` norm (both (norm,
+    band_key)) sharing a band with char-3-gram Jaccard >=
+    JACCARD_THRESHOLD, and takes the MIN ``ref_map`` node_id over its
+    matches (deterministic greedy tie rule).  Only verified pairs join
+    ``ref_map``."""
+    ref = ref_bands.select("band_key", F.col("norm").alias("_ref"))
+    return (bands.join(ref, "band_key")
+            .select("norm", "_ref").distinct()
+            .where(_char3_jaccard("norm", "_ref")
+                   >= F.lit(JACCARD_THRESHOLD))
+            .join(ref_map.withColumnRenamed("norm", "_ref"), "_ref")
+            .groupBy("norm").agg(F.min("node_id").alias("node_id")))
+
+
 def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
-                     num_hashes: int = 16, bands: int = 8,
                      salt: int = 8,
                      broadcast_map_threshold: int = 1_000_000,
-                     jaccard_threshold: float = 0.5,
                      max_bucket: int = 64,
                      metrics_out: dict | None = None,
                      caches_out: list | None = None,
@@ -655,15 +676,17 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
     frame projected, or the union of previous delta_maps.
 
     Stability contract: rows of ``existing_map`` are NEVER reassigned.
-    New norms resolve in three tiers:
+    New norms (normalized by canonicalize's own ``_annotate``) resolve
+    in three tiers:
     1. exact: norm already in the map -> its existing node_id;
-    2. attach: near-duplicate of an existing norm (same banded MinHash
-       blocking + the SAME char-3-gram Jaccard verification as the
-       batch path) -> the existing node_id, MIN across multiple
-       matches (deterministic greedy tie rule);
-    3. novel: the remainder clusters among ITSELF (lsh_candidate_pairs
-       + connected_components) and mints new node ids.  A new id is a
-       min-norm component label over norms disjoint from the map, and
+    2. attach (``_attach``): near-duplicate of an existing norm (the
+       same banded MinHash blocking, band cap and char-3-gram Jaccard
+       verification as the batch path) -> the existing node_id, MIN
+       across multiple matches (deterministic greedy tie rule);
+    3. novel: the remainder clusters among ITSELF through canonicalize's
+       own ``_cluster`` (the driver hatch for small increments,
+       distributed LSH + CC above) and mints new node ids.  A new id is
+       a min-norm component label over norms disjoint from the map, and
        every existing id is a min-norm over mapped norms — so fresh
        ids cannot collide with existing ones.
 
@@ -701,41 +724,30 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
             caches_out.append(out)
         return out
 
-    # cores-derived partitioning for the stored normalized frame —
-    # same rationale and same no-op-on-clusters guarantee as
-    # canonicalize's spelling (r7)
-    cores = new_mentions.sparkSession.sparkContext.defaultParallelism
-    m_ann = _mat(
-        new_mentions.coalesce(max(int(cores), 1))
-        .withColumn("_a1", normalize_entity(F.col("arg1_text")))
-        .withColumn("_a2", normalize_entity(F.col("arg2_text"))))
+    m_ann = _mat(_annotate(new_mentions))
     norms = (m_ann.select(F.col("_a1").alias("norm"))
              .unionByName(m_ann.select(F.col("_a2").alias("norm")))
              .where(F.col("norm") != "").distinct())
     unknown = _mat(norms.join(existing_map, "norm", "left_anti"))
 
-    b_new = _mat(_lsh_banded(unknown, num_hashes, bands))
+    b_new = _mat(_lsh_banded(unknown))
     # the map-side band frame is read TWICE (sizes + the kept-join
     # probe) and its minhash pipeline is the dominant blocking cost —
-    # materialize it once per increment, or better: pass
+    # cap_blocks materializes it once per increment, or better: pass
     # ``existing_banded`` (band_entities of the map, maintained by
     # unioning band_entities(delta_map) after each increment) and the
     # map is never re-banded at all; a caller-owned frame is NOT
     # added to caches_out (its lifetime spans increments)
     if existing_banded is not None:
-        # guard against a frame built with DIFFERENT (num_hashes,
-        # bands) or one that doesn't cover the map: band keys would
-        # never collide, every near-dup would silently mint a fresh
-        # id, and n_attached=0 looks healthy.  The probe norms are
-        # COLLECTED once (r7, advisor item: the former lazy
-        # limit(1)-without-order frame was evaluated twice — once for
-        # `hits`, once for `expect.count()` — and limit is
-        # nondeterministic across evaluations, so the two evaluations
-        # could probe different norms); a handful of norms rather
-        # than one catches frames stale for a subset of the map, and
-        # the expected hit count is bands x probes by construction
-        # (_lsh_banded emits exactly `bands` rows per norm), so no
-        # second count job.
+        # stale-frame guard: a frame that doesn't cover the map never
+        # shares a band key with it, so every near-dup would silently
+        # mint a fresh id, and n_attached=0 looks healthy.  The probe
+        # norms are COLLECTED once (r7: a lazy limit(1)-without-order
+        # frame is nondeterministic across its two evaluations); a
+        # handful of norms rather than one catches frames stale for a
+        # subset of the map, and the expected hit count is BANDS x
+        # probes by construction (_lsh_banded emits exactly BANDS rows
+        # per norm), so no second count job.
         sample_norms = [r.norm for r in
                         existing_map.select("norm").limit(3).collect()]
         if sample_norms:
@@ -744,40 +756,29 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
             spark = new_mentions.sparkSession
             probe = spark.createDataFrame(
                 pd.DataFrame({"norm": sample_norms}))
-            hits = (_lsh_banded(probe, num_hashes, bands)
+            hits = (_lsh_banded(probe)
                     .join(existing_banded, ["norm", "band_key"],
                           "left_semi").count())
-            if hits != bands * len(sample_norms):
+            want = BANDS * len(sample_norms)
+            if hits != want:
                 raise ValueError(
-                    "existing_banded does not match existing_map under "
-                    f"(num_hashes={num_hashes}, bands={bands}): "
+                    "existing_banded does not match existing_map: "
                     f"{len(sample_norms)} probe norms matched "
-                    f"{hits}/{bands * len(sample_norms)} band keys — "
-                    "rebuild it with band_entities(existing_map) using "
-                    "the SAME parameters")
+                    f"{hits}/{want} band keys — rebuild it with "
+                    "band_entities(existing_map)")
         b_old = existing_banded
     else:
-        b_old = _mat(_lsh_banded(existing_map.select("norm").distinct(),
-                                 num_hashes, bands))
-    old_sizes = b_old.groupBy("band_key").agg(
-        F.count("*").alias("_bn"))
+        b_old = _lsh_banded(existing_map.select("norm").distinct())
+    # attach-tier drops are NOT silent: a hot existing band over the
+    # cap means new near-dup spellings of its entities mint fresh ids
+    # instead of attaching (permanent drift until the next full
+    # canonicalize) — surfaced per increment
+    b_old_kept, dropped = cap_blocks(b_old, ["band_key"], max_bucket)
+    if existing_banded is None and caches_out is not None:
+        caches_out.append(b_old_kept)
     if metrics_out is not None:
-        # attach-tier drops are NOT silent: a hot existing band that
-        # exceeds the cap means new near-dup spellings of its entities
-        # mint fresh ids instead of attaching (permanent drift until
-        # the next full canonicalize) — surface it per increment
-        metrics_out["dropped_bands_attach"] = (
-            old_sizes.where(F.col("_bn") > max_bucket).count())
-    b_old_kept = (b_old.join(old_sizes, "band_key")
-                  .where(F.col("_bn") <= max_bucket)
-                  .select("band_key", F.col("norm").alias("_old")))
-    attached = _mat(
-        b_new.join(b_old_kept, "band_key")
-        .select("norm", "_old").distinct()
-        .where(_char3_jaccard("norm", "_old")
-               >= F.lit(jaccard_threshold))
-        .join(existing_map.withColumnRenamed("norm", "_old"), "_old")
-        .groupBy("norm").agg(F.min("node_id").alias("node_id")))
+        metrics_out["dropped_bands_attach"] = dropped
+    attached = _mat(_attach(b_new, b_old_kept, existing_map))
 
     # SECOND attach hop: a norm whose only near-dup link is to a norm
     # attached in THIS increment would otherwise fall through to the
@@ -787,28 +788,18 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
     # existing frame filtered two ways — no new signature work.
     # Chains longer than two hops remain deferred to the next full
     # canonicalize (see Known divergence) and land in n_novel.
-    b_att = (b_new.join(attached.select("norm", "node_id"), "norm")
-             .select("band_key", F.col("norm").alias("_via"),
-                     "node_id"))
-    hop2 = _mat(
-        b_new.join(attached, "norm", "left_anti")
-        .join(b_att, "band_key")
-        .select("norm", "_via", "node_id").distinct()
-        .where(_char3_jaccard("norm", "_via")
-               >= F.lit(jaccard_threshold))
-        .groupBy("norm").agg(F.min("node_id").alias("node_id")))
+    hop2 = _mat(_attach(b_new.join(attached, "norm", "left_anti"),
+                        b_new.join(attached, "norm", "left_semi"),
+                        attached))
     attached = _mat(attached.unionByName(hop2))
     if metrics_out is not None:
         metrics_out["n_attached_hop2"] = hop2.count()
 
     novel = _mat(unknown.join(attached, "norm", "left_anti"))
-    pairs = lsh_candidate_pairs(novel, num_hashes=num_hashes,
-                                bands=bands,
-                                jaccard_threshold=jaccard_threshold,
-                                max_bucket=max_bucket,
-                                metrics_out=metrics_out)
-    comp = connected_components(pairs, novel)
-    fresh = comp.select("norm", F.col("component").alias("node_id"))
+    n_novel = novel.count()
+    fresh = (_cluster(novel, n_novel, max_bucket=max_bucket,
+                      metrics_out=metrics_out)
+             .select("norm", F.col("component").alias("node_id")))
 
     delta_map = _mat(attached.unionByName(fresh))
     full_map = existing_map.unionByName(delta_map)
@@ -816,7 +807,7 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
     if metrics_out is not None:
         metrics_out["n_exact"] = norms.count() - unknown.count()
         metrics_out["n_attached"] = attached.count()
-        metrics_out["n_novel"] = novel.count()
+        metrics_out["n_novel"] = n_novel
     linked = _link_join(m_ann, full_map, n_map,
                         broadcast_map_threshold, salt)
     return linked, delta_map

@@ -21,6 +21,7 @@ from __future__ import annotations
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -107,23 +108,10 @@ class StageWriter:
             (stage, bucket, rows, wall_ms, run_id, ts)
     """
 
-    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16,
-                 align_writes: bool = True):
+    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16):
         self.spark = spark
         self.root = str(root)
         self.n_buckets = n_buckets
-        # bucket-aligned writes: shuffle each stage's rows onto their
-        # bucket before partitionBy, so one task owns one bucket dir.
-        # Without this every upstream task writes a sliver file into
-        # EVERY bucket dir (tasks x buckets tiny files) and the
-        # manifest count read-back re-lists them all — the dominant
-        # fixed cost of the KB-scale edges/nary stages in the full-job
-        # bench.  The shuffle moves each row once; at production scale
-        # n_buckets is sized so one bucket ~ one task's worth of data
-        # (the bucket is the unit of recovery AND of write
-        # parallelism), so no parallelism is lost.  The flag exists
-        # for A/B measurement, not production use.
-        self.align_writes = align_writes
         spark.conf.set("spark.sql.sources.partitionOverwriteMode",
                        "dynamic")
 
@@ -150,8 +138,6 @@ class StageWriter:
         n)`` over a new modulus) — manifest-completed buckets would be
         skipped while holding the WRONG doc subset, i.e. duplicated
         and missing rows with no error.  Mismatch raises instead."""
-        from pyspark.errors import AnalysisException
-
         try:
             m = self.spark.read.parquet(self._manifest(stage))
         except AnalysisException:
@@ -194,11 +180,20 @@ class StageWriter:
         bucketed = with_bucket(df, self.n_buckets, key=key)
         if len(pending) < self.n_buckets:
             bucketed = bucketed.where(F.col("bucket").isin(pending))
-        if self.align_writes:
-            # CPU-heavy upstream work (extraction UDFs) still runs at
-            # full parallelism in the map side of this shuffle; only
-            # the parquet-write stage narrows to one task per bucket
-            bucketed = bucketed.repartition(len(pending), "bucket")
+        # bucket-aligned writes: shuffle each stage's rows onto their
+        # bucket before partitionBy, so one task owns one bucket dir.
+        # Without this every upstream task writes a sliver file into
+        # EVERY bucket dir (tasks x buckets tiny files) and the
+        # manifest count read-back re-lists them all — the dominant
+        # fixed cost of the KB-scale edges/nary stages in the full-job
+        # bench.  The shuffle moves each row once; at production scale
+        # n_buckets is sized so one bucket ~ one task's worth of data
+        # (the bucket is the unit of recovery AND of write
+        # parallelism), so no parallelism is lost.  CPU-heavy upstream
+        # work (extraction UDFs) still runs at full parallelism in the
+        # map side of this shuffle; only the parquet-write stage
+        # narrows to one task per bucket.
+        bucketed = bucketed.repartition(len(pending), "bucket")
 
         t0 = time.monotonic()
         (bucketed.write.mode("overwrite")
@@ -207,7 +202,17 @@ class StageWriter:
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         # per-bucket row counts for the manifest (lineage metrics)
-        out = self.spark.read.parquet(self._data(stage))
+        try:
+            out = self.spark.read.parquet(self._data(stage))
+        except AnalysisException:
+            # a zero-row partitionBy write leaves only _SUCCESS, which
+            # has no schema to read back (empty or all-media input).
+            # An empty unpartitioned write into one pending bucket's
+            # directory leaves a schema-only file, so this read, a
+            # resume and read_stage all see the stage typed and empty.
+            (df.limit(0).write.mode("overwrite")
+             .parquet(f"{self._data(stage)}/bucket={pending[0]}"))
+            out = self.spark.read.parquet(self._data(stage))
         counts = {r.bucket: r["count"] for r in
                   out.where(F.col("bucket").isin(pending))
                   .groupBy("bucket").count().collect()}

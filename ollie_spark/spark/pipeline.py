@@ -283,13 +283,12 @@ def extract_mentions(sents: DataFrame, parser=None) -> DataFrame:
 
 
 def extract_serialized(graphs_df: DataFrame,
-                       graph_col: str = "graph",
                        text_col: str | None = None) -> DataFrame:
     """Pre-parsed corpus ingestion (reference --serialized mode,
-    OpenParse.scala:298-307): rows carry a pickled dependency graph
-    (``label(src_tok, dst_tok); ...`` format, graph.py:194) instead of
-    raw text; deserialization errors shield per row exactly like parse
-    errors.
+    OpenParse.scala:298-307): rows carry a pickled dependency graph in
+    a ``graph`` column (``label(src_tok, dst_tok); ...`` format,
+    graph.py:194) instead of raw text; deserialization errors shield
+    per row exactly like parse errors.
 
     ``text_col`` (optional) restores the original sentence text onto
     each deserialized graph.  The pickle encodes only the graph's
@@ -315,7 +314,7 @@ def extract_serialized(graphs_df: DataFrame,
         texts = pdf[text_col] if text_col is not None else None
 
         def gen():
-            for i, p in enumerate(pdf[graph_col]):
+            for i, p in enumerate(pdf["graph"]):
                 try:
                     yield DependencyGraph.deserialize(
                         p, text=None if texts is None else texts.iloc[i])
@@ -375,15 +374,13 @@ def run_extraction(documents: DataFrame,
 
 def run_extraction_serialized(graphs_df: DataFrame,
                               conf_threshold: float = 0.0,
-                              graph_col: str = "graph",
                               text_col: str | None = None) -> DataFrame:
     """Pre-parsed corpus -> scored mentions: the --serialized pipeline
     end-to-end (deserialize + extract + score + filter).  Pass
     ``text_col`` to restore original sentence text onto the graphs
     (see extract_serialized)."""
     return _score_and_filter(
-        extract_serialized(graphs_df, graph_col=graph_col,
-                           text_col=text_col),
+        extract_serialized(graphs_df, text_col=text_col),
         conf_threshold)
 
 

@@ -58,7 +58,7 @@ def main():
     # stage 1: the banded frame alone (includes the 16-hash minhash
     # expression analysis/codegen + one localCheckpoint)
     banded = clock("banded_checkpoint",
-                   lambda: materialize_once(_lsh_banded(entities, 16, 8)))
+                   lambda: materialize_once(_lsh_banded(entities)))
     # stages 2-3: the cap step lsh_candidate_pairs runs (sizes agg,
     # dropped count, kept frame); its own materialize_once re-stores
     # the already-checkpointed band frame, a scan with no signature work
@@ -80,7 +80,7 @@ def main():
 
     # control: SECOND banded run in the same session (warm catalyst)
     clock("banded_checkpoint_warm",
-          lambda: materialize_once(_lsh_banded(entities, 16, 8)))
+          lambda: materialize_once(_lsh_banded(entities)))
 
     print({k: v for k, v in t.items()})
     spark.stop()

@@ -1,9 +1,10 @@
 """Full-job integration: documents -> materialized graph tables with
 manifests; resume re-processes only pending buckets."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from ollie_spark.spark.corpus import corpus
+from ollie_spark.spark.corpus import DOCUMENTS_SCHEMA, corpus
 from ollie_spark.spark.job import build_graph, read_graph
 from ollie_spark.spark.materialize import StageWriter
 
@@ -52,3 +53,33 @@ def test_build_graph_resumes_mid_run(spark, tmp_path):
     g = read_graph(spark, root)
     assert g["mentions"].count() > 0
     assert g["nary"].count() == m["nary"]["rows"]
+
+
+@pytest.mark.parametrize("rows", [
+    [],
+    [("d1", [("image", None, "media://d1/0", 0),
+             ("audio", None, "media://d1/1", 1)])],
+], ids=["empty", "all_media"])
+def test_build_graph_degenerate_input_writes_typed_empty_stages(
+        spark, tmp_path, rows):
+    """No text spans means zero rows in every stage.  A zero-row
+    partitioned write leaves no parquet file to read a schema from, so
+    the stage must still land typed and empty: build_graph, read_graph
+    and a resume all read it back."""
+    docs = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
+    root = str(tmp_path / "graph")
+    m = build_graph(spark, docs, root, n_buckets=4)
+    for stage in ("mentions", "nodes", "edges", "nary"):
+        assert m[stage]["rows"] == 0, stage
+        assert len(m[stage]["buckets"]) == 4, stage
+
+    g = read_graph(spark, root)
+    assert "node_id" in g["nodes"].columns
+    assert "src_node" in g["edges"].columns
+    assert "arg1_text" in g["mentions"].columns
+    for stage, df in g.items():
+        assert df.count() == 0, stage
+        assert "bucket" in df.columns, stage
+
+    again = build_graph(spark, docs, root, n_buckets=4)
+    assert all(again[s]["buckets"] == [] for s in again)

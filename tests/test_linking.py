@@ -475,8 +475,9 @@ def test_incremental_link_attach_drops_are_counted(spark):
     from ollie_spark.spark.linking import incremental_link
 
     # "aabaab" and "abaaba" have the SAME char-3-gram set, so their
-    # minhash signatures — hence ALL their bands — are identical:
-    # with max_bucket=1 every one of those bands is over the cap
+    # minhash signatures — hence ALL 8 of their band keys — are
+    # identical: with max_bucket=1 every one of those bands is over
+    # the cap
     existing = spark.createDataFrame(
         [("aabaab", "n1"), ("abaaba", "n1")],
         "norm string, node_id string")
@@ -484,7 +485,7 @@ def test_incremental_link_attach_drops_are_counted(spark):
     mo = {}
     _, delta = incremental_link(batch, existing, metrics_out=mo,
                                 max_bucket=1)
-    assert mo["dropped_bands_attach"] >= 1
+    assert mo["dropped_bands_attach"] == 8
     # with every old band over the cap, the near-dup went novel
     dm = {r.norm: r.node_id for r in delta.collect()}
     assert dm["aabaabx"] != "n1"
