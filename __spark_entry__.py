@@ -266,7 +266,7 @@ def q18_ann_cosine_topk(spark, sf_dir):
     corpus row's norm AND the (constant) query norm once per row; the
     stored/broadcast norms leave one dot aggregate per row.  Values
     are bit-identical (same aggregates, same sqrt-product division)."""
-    e = _spread(_t(spark, sf_dir, "embeddings")) \
+    e = _t(spark, sf_dir, "embeddings") \
         .select("vec_id", F.transform("embedding",
                                       lambda x: x.cast("double"))
                 .alias("emb")) \
@@ -287,7 +287,7 @@ def q19_ivf_bucketed_ann(spark, sf_dir):
     """IVF-style ANN: coarse cell = sign bits of the first 4 dims;
     search only the query's cell (the 100TB scale path: cells prune
     the candidate set before any distance math)."""
-    e = _spread(_t(spark, sf_dir, "embeddings")) \
+    e = _t(spark, sf_dir, "embeddings") \
         .select("vec_id", F.transform("embedding",
                                       lambda x: x.cast("double"))
                 .alias("emb"))

@@ -22,7 +22,7 @@ import time
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -183,8 +183,7 @@ class StageWriter:
         # bucket-aligned writes: shuffle each stage's rows onto their
         # bucket before partitionBy, so one task owns one bucket dir.
         # Without this every upstream task writes a sliver file into
-        # EVERY bucket dir (tasks x buckets tiny files) and the
-        # manifest count read-back re-lists them all — the dominant
+        # EVERY bucket dir (tasks x buckets tiny files) — the dominant
         # fixed cost of the KB-scale edges/nary stages in the full-job
         # bench.  The shuffle moves each row once; at production scale
         # n_buckets is sized so one bucket ~ one task's worth of data
@@ -193,29 +192,42 @@ class StageWriter:
         # work (extraction UDFs) still runs at full parallelism in the
         # map side of this shuffle; only the parquet-write stage
         # narrows to one task per bucket.
-        bucketed = bucketed.repartition(len(pending), "bucket")
+        # The manifest's per-bucket row counts are observed in the
+        # write's own result stage, so counting costs no job of its
+        # own; Spark applies a result stage's accumulator updates once
+        # per partition, so a retried or speculative task does not
+        # count twice.  One histogram_numeric aggregate with a bin per
+        # pending bucket does the counting at one binary search over
+        # the bins per row (a count_if per bucket costs a comparison
+        # per bucket per row: 8x the write's wall at 1,024 buckets,
+        # 400k rows on a 4-core host).
+        # The histogram merges bins only when it holds more distinct
+        # values than bins, closest first: a bucket's copies from two
+        # partitions sit 0 apart and distinct buckets 1 apart, so the
+        # counts stay exact and a merged centre is off by float
+        # rounding only (hence the double input and the round).
+        rows_seen = Observation()
+        bucketed = (bucketed.repartition(len(pending), "bucket")
+                    .observe(rows_seen, F.histogram_numeric(
+                        F.col("bucket").cast("double"),
+                        F.lit(max(2, len(pending)))).alias("bins")))
 
         t0 = time.monotonic()
         (bucketed.write.mode("overwrite")
          .partitionBy("bucket")
          .parquet(self._data(stage)))
         wall_ms = int((time.monotonic() - t0) * 1000)
-
-        # per-bucket row counts for the manifest (lineage metrics)
-        try:
-            out = self.spark.read.parquet(self._data(stage))
-        except AnalysisException:
+        counts = dict.fromkeys(pending, 0)
+        for x, y in rows_seen.get["bins"] or []:
+            counts[round(x)] += int(y)
+        if not any(counts.values()):
             # a zero-row partitionBy write leaves only _SUCCESS, which
             # has no schema to read back (empty or all-media input).
             # An empty unpartitioned write into one pending bucket's
-            # directory leaves a schema-only file, so this read, a
-            # resume and read_stage all see the stage typed and empty.
+            # directory leaves a schema-only file, so a resume and
+            # read_stage see the stage typed and empty.
             (df.limit(0).write.mode("overwrite")
              .parquet(f"{self._data(stage)}/bucket={pending[0]}"))
-            out = self.spark.read.parquet(self._data(stage))
-        counts = {r.bucket: r["count"] for r in
-                  out.where(F.col("bucket").isin(pending))
-                  .groupBy("bucket").count().collect()}
         # pandas/Arrow: a plain-list createDataFrame is a pickled
         # python RDD whose write spins python workers (seconds of
         # fixed per-stage latency); the Arrow path is a JVM
@@ -223,7 +235,7 @@ class StageWriter:
         import pandas as pd
 
         manifest = self.spark.createDataFrame(pd.DataFrame(
-            [(stage, int(b), int(counts.get(b, 0)), wall_ms, run_id,
+            [(stage, int(b), counts[b], wall_ms, run_id,
               time.time(), self.n_buckets) for b in pending],
             columns=["stage", "bucket", "rows", "wall_ms", "run_id",
                      "ts", "n_buckets"])

@@ -7,6 +7,12 @@ Usage (the north_rule's cluster-size protocol; see BASELINE.md):
         scripts/extract_job.py --n-docs 20000
     spark-submit --master local[32] --py-files ollie_spark.zip \
         scripts/extract_job.py --n-docs 20000
+
+spark-submit starts the driver JVM before this script runs, so the
+JIT options ``build_session`` gives the driver must be passed on the
+command line to measure the same engine:
+    --conf "spark.driver.defaultJavaOptions=$(python3 -c \
+        'from ollie_spark.spark.session import DRIVER_JIT_OPTIONS as o; print(o)')"
 """
 
 from __future__ import annotations

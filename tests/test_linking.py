@@ -309,6 +309,25 @@ def test_stage_writer_resume(spark, mentions, tmp_path):
     assert metrics.select("bucket").distinct().count() == 8
 
 
+@pytest.mark.parametrize("buckets", [None, [0, 1, 2], [5]],
+                         ids=["full", "partial", "one"])
+def test_stage_writer_manifest_rows_match_written_buckets(
+        spark, mentions, tmp_path, buckets):
+    """The manifest's per-bucket ``rows`` equal the rows the write left
+    in each bucket, for a full run, a partial one and one bucket."""
+    w = StageWriter(spark, str(tmp_path), n_buckets=8)
+    r = w.run_stage("mentions", mentions, buckets=buckets)
+    written = {row.bucket: row["count"] for row in
+               w.read_stage("mentions").groupBy("bucket").count()
+               .collect()}
+    manifest = {row.bucket: row.rows for row in
+                w.metrics("mentions").collect()}
+    assert sorted(manifest) == (buckets or list(range(8)))
+    assert manifest == {b: written.get(b, 0) for b in manifest}
+    assert set(written) <= set(manifest)
+    assert r["rows"] == sum(written.values()) > 0
+
+
 def test_stage_writer_resume_scheme_qualified_root(spark, mentions,
                                                    tmp_path):
     """r6: manifest probe must work on Hadoop-FS URIs, not just
