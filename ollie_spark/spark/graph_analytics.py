@@ -1,6 +1,6 @@
 """Graph analytics over the constructed KG: weighted PageRank (the
 entity-importance score a KG consumer ranks query results and picks
-canonical labels with) and degree statistics.
+canonical labels with).
 
 Spark-first iterative shape, same discipline as the linking module's
 connected components (linking.py): ranks are a narrow one-row-per-
@@ -175,17 +175,3 @@ def kg_training_pairs(edges: DataFrame, src_col: str = "src_node",
     return (pos.withColumn("label", F.lit(1).cast("int"))
             .unionByName(neg.withColumn("label",
                                         F.lit(0).cast("int"))))
-
-
-def degree_stats(edges: DataFrame, src_col: str = "src_node",
-                 dst_col: str = "dst_node") -> DataFrame:
-    """Per-node in/out degree (parallel edges counted) — one pass per
-    direction, map-side-combining counts, full outer merge."""
-    outd = (edges.groupBy(F.col(src_col).alias("node"))
-            .agg(F.count("*").alias("out_degree")))
-    ind = (edges.groupBy(F.col(dst_col).alias("node"))
-           .agg(F.count("*").alias("in_degree")))
-    return (outd.join(ind, "node", "full")
-            .select("node",
-                    F.coalesce("out_degree", F.lit(0)).alias("out_degree"),
-                    F.coalesce("in_degree", F.lit(0)).alias("in_degree")))

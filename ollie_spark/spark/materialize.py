@@ -92,6 +92,19 @@ def cap_blocks(frame: DataFrame, key_cols: list,
     return kept, dropped
 
 
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` exists, asked of the Hadoop ``FileSystem`` the
+    path's scheme names, so an object-store root (``s3a://``,
+    ``gs://``) answers as the Spark reader would, which a driver-local
+    ``Path.exists()`` cannot.  Probing with ``spark.read`` instead
+    fails a query, and once the session has used an ``Observation``
+    every failed query logs a listener ERROR with a stack trace."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return p.getFileSystem(conf).exists(p)
+
+
 def with_bucket(df: DataFrame, n_buckets: int,
                 key: str = "doc_id") -> DataFrame:
     return df.withColumn(
@@ -124,13 +137,12 @@ class StageWriter:
     def completed_buckets(self, stage: str) -> set[int]:
         """Buckets already recorded in the stage manifest.
 
-        Probes via the Spark reader, NOT the driver-local filesystem
-        (r6): a ``Path.exists()`` check is always False on an
-        object-store root (``s3a://``, ``gs://``) — resume would
-        silently re-run every bucket (idempotent, so correct, but
-        resume is the feature).  ``AnalysisException`` covers both
-        path-does-not-exist and the unable-to-infer-schema empty-dir
-        case on any Hadoop-supported filesystem.
+        Probes via ``path_exists`` (the Hadoop filesystem), NOT the
+        driver-local one: a ``Path.exists()`` check is always False on
+        an object-store root — resume would silently re-run every
+        bucket (idempotent, so correct, but resume is the feature).
+        ``AnalysisException`` still covers a directory with no schema
+        to infer (an empty manifest dir).
 
         Bucketing-drift guard (r6): the manifest records the run's
         ``n_buckets``; resuming with a DIFFERENT value would silently
@@ -138,8 +150,11 @@ class StageWriter:
         n)`` over a new modulus) — manifest-completed buckets would be
         skipped while holding the WRONG doc subset, i.e. duplicated
         and missing rows with no error.  Mismatch raises instead."""
+        path = self._manifest(stage)
+        if not path_exists(self.spark, path):
+            return set()
         try:
-            m = self.spark.read.parquet(self._manifest(stage))
+            m = self.spark.read.parquet(path)
         except AnalysisException:
             return set()
         if "n_buckets" in m.columns:

@@ -3,8 +3,8 @@ typed metadata.
 
 Media spans (kind in image/audio/video) ride through the KG pipeline
 untouched (span-sequence invariant); this module adds the training-data
-operators a multimodal corpus needs — decode, feature-extract, resize,
-frame-sample — as Arrow-batched ``mapInPandas`` stages.
+operators a multimodal corpus needs — decode, feature-extract, ANN
+bucketing — as Arrow-batched ``mapInPandas`` stages.
 
 The actual codecs are STUBS: no image/audio libraries ship in this
 container, so ``decode_media`` routes to a clearly-marked
@@ -33,7 +33,7 @@ MEDIA_FEATURES_SCHEMA = StructType([
     StructField("width", IntegerType()),       # image/video
     StructField("height", IntegerType()),
     StructField("duration_ms", IntegerType()),  # audio/video
-    StructField("n_frames", IntegerType()),     # video frame-sample
+    StructField("n_frames", IntegerType()),     # video
     StructField("embedding", ArrayType(FloatType())),  # feature vector
     StructField("error", StringType()),
 ])
@@ -132,30 +132,6 @@ def extract_media_features(media: DataFrame,
                 columns=[f.name for f in MEDIA_FEATURES_SCHEMA.fields])
 
     return media.mapInPandas(run, schema=MEDIA_FEATURES_SCHEMA)
-
-
-def resize_images(features: DataFrame, width: int,
-                  height: int) -> DataFrame:
-    """Resize stub: real implementations transform ``payload``; the
-    Spark-side contract (schema preserved, metadata updated) is real."""
-    return (features
-            .withColumn("width", F.when(F.col("kind") == "image",
-                                        F.lit(width))
-                        .otherwise(F.col("width")))
-            .withColumn("height", F.when(F.col("kind") == "image",
-                                         F.lit(height))
-                        .otherwise(F.col("height"))))
-
-
-def sample_frames(features: DataFrame, every_n: int) -> DataFrame:
-    """Frame-sample stub for videos: keeps every ``every_n``-th frame's
-    count in ``n_frames`` (payload transform is decoder territory)."""
-    return features.withColumn(
-        "n_frames",
-        F.when(F.col("kind") == "video",
-               F.greatest(F.floor(F.col("n_frames") / every_n),
-                          F.lit(1)).cast("int"))
-        .otherwise(F.col("n_frames")))
 
 
 def media_ann_buckets(features: DataFrame,

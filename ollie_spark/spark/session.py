@@ -67,22 +67,12 @@ def build_session(app_name: str = "ollie-spark",
          .config("spark.sql.adaptive.skewJoin.enabled", "true")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-         # preloaded python-worker daemon: pandas/pyarrow + the
-         # extractor model import once per executor (the daemon) and
-         # are inherited copy-on-write by every forked worker, instead
-         # of once per core (daemon_preload.py; the win scales with
-         # cores per executor).  Opt-out knob for environments where
-         # the package isn't importable by `python -m`.
-         .config("spark.python.daemon.module",
-                 os.environ.get("OLLIE_SPARK_PY_DAEMON",
-                                "ollie_spark.spark.daemon_preload"))
-         # the daemon module is imported by `python -m` in a fresh
-         # process: ship this package's root on the worker PYTHONPATH
-         # so the import works regardless of the driver's cwd (on a
-         # cluster the package arrives via --py-files the same way)
+         # workers unpickle the UDF closures by module reference: ship
+         # this package's root on the worker PYTHONPATH so the import
+         # works regardless of the driver's cwd (on a cluster the
+         # package arrives via --py-files the same way)
          .config("spark.executorEnv.PYTHONPATH", _worker_pythonpath())
-         .config("spark.driver.memory",
-                 os.environ.get("OLLIE_SPARK_DRIVER_MEM", "8g"))
+         .config("spark.driver.memory", "8g")
          .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
          .config("spark.ui.enabled", "false"))
     for k, v in (extra_conf or {}).items():

@@ -89,74 +89,6 @@ def windowed_mention_rate(mentions_stream: DataFrame,
                     "rel_text", "n_mentions"))
 
 
-def dedup_documents_stream(docs_stream: DataFrame,
-                           id_col: str = "doc_id",
-                           ts_col: str = "ingest_time",
-                           watermark: str = "10 minutes") -> DataFrame:
-    """Cross-batch document dedup for re-delivering sources (an
-    at-least-once feed re-sends docs after retries/failover): the
-    first-seen row per ``id_col`` is emitted immediately, any
-    re-delivery within the watermark is suppressed, and the per-id
-    state is EVICTED once the watermark passes — bounded state at any
-    stream length, which a plain streaming ``dropDuplicates`` (keys
-    kept forever) does not give at 10^12-doc scale."""
-    return (docs_stream.withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark([id_col]))
-
-
-def source_running_stats(docs_stream: DataFrame,
-                         source_col: str = "source",
-                         text_col: str = "text") -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState):
-    cumulative per-source ingest stats — docs and chars seen so far —
-    re-emitted on every micro-batch that touches the source.
-
-    This is the pattern slot for any custom stateful op Spark lacks
-    natively (running corpus counters, per-source quota cutoffs,
-    streaming near-dup against a stored fingerprint set): state is
-    partitioned by group key across executors, Arrow-batched into
-    pandas, and checkpointed with the query.  Timeout is NoTimeout
-    here because corpus sources are few and long-lived; per-entity
-    keys at scale would set a ProcessingTimeTimeout to evict idle
-    state."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = f"{source_col} string, n_docs long, n_chars long"
-    state_schema = "n_docs long, n_chars long"
-
-    def update(key, pdfs, state):
-        n_docs, n_chars = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n_docs += len(pdf)
-            n_chars += int(pdf[text_col].str.len().sum())
-        state.update((n_docs, n_chars))
-        yield pd.DataFrame([{source_col: key[0], "n_docs": n_docs,
-                             "n_chars": n_chars}])
-
-    return (docs_stream.groupBy(source_col)
-            .applyInPandasWithState(update, out_schema, state_schema,
-                                    "update",
-                                    GroupStateTimeout.NoTimeout))
-
-
-def curation_filter_stream(docs_stream: DataFrame,
-                           text_col: str = "text") -> DataFrame:
-    """At-ingest curation pre-filter: the curation funnel's map
-    stages (language-ID, quality, repetition keep rules) applied to
-    the document stream via the SAME shared predicates the batch
-    funnel uses (textops._curation_predicates), so junk never lands
-    in the corpus store.  Stateless — no watermark, no state store,
-    pure per-row projection+filter at any stream length; the funnel's
-    JOIN stages (exact dedup, near-dup prune, decontamination,
-    sampling) remain batch jobs over the materialized store, which is
-    where they belong (they need corpus-wide visibility)."""
-    from ollie_spark.spark.textops import _curation_predicates
-
-    keep_lang, keep_quality, keep_rep = _curation_predicates(text_col)
-    return docs_stream.where(keep_lang & keep_quality & keep_rep)
-
-
 def link_mention_batch(batch_df: DataFrame, batch_id: int,
                        map_dir: str, linked_dir: str,
                        banded_state: dict | None = None) -> None:
@@ -169,19 +101,22 @@ def link_mention_batch(batch_df: DataFrame, batch_id: int,
     partition, so a batch replayed after a crash (delta written,
     checkpoint not committed) sees byte-identical input state — and
     because novel node ids are content-derived min-norm labels, the
-    rewritten partitions are identical to the first attempt's.  The
-    map read is a spark.read probe (AnalysisException = no map yet),
-    the object-store-safe spelling from materialize.StageWriter."""
+    rewritten partitions are identical to the first attempt's.  "No
+    map yet" is probed as in materialize.StageWriter: path_exists,
+    then AnalysisException for a directory with no schema."""
     from pyspark.errors import AnalysisException
 
     from .linking import band_entities, incremental_link
+    from .materialize import path_exists
     spark = batch_df.sparkSession
-    try:
-        existing = (spark.read.parquet(map_dir)
-                    .where(F.col("batch_id") != batch_id)
-                    .select("norm", "node_id"))
-    except AnalysisException:
-        existing = spark.createDataFrame([], "norm string, node_id string")
+    existing = spark.createDataFrame([], "norm string, node_id string")
+    if path_exists(spark, map_dir):
+        try:
+            existing = (spark.read.parquet(map_dir)
+                        .where(F.col("batch_id") != batch_id)
+                        .select("norm", "node_id"))
+        except AnalysisException:
+            pass
     caches = []
     pre_banded = banded_state.get("banded") if banded_state else None
     if banded_state is not None and pre_banded is None:
@@ -247,28 +182,3 @@ def stream_link(spark: SparkSession, input_dir: str, schema: str,
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start())
-
-
-def session_stats_stream(events_stream: DataFrame,
-                         user_col: str = "user_id",
-                         ts_col: str = "ts",
-                         value_col: str = "value",
-                         gap_minutes: int | None = None,
-                         watermark: str = "10 minutes") -> DataFrame:
-    """Streaming sessionization with a watermark, so per-user
-    open-session state is BOUNDED: a session's state is emitted
-    exactly once and evicted when the watermark passes its end
-    (append mode), and events later than the watermark are dropped
-    instead of reopening it.  Sessions spanning micro-batches merge
-    in the state store — the property a per-batch foreachBatch
-    sessionizer cannot give.
-
-    DELEGATES to ``temporal.session_stats`` (a pure DataFrame
-    transform, equally valid on a stream) after attaching the
-    watermark — batch q40 and the stream are ONE spelling, not two
-    copies held together by a test."""
-    from .temporal import session_stats
-    return session_stats(
-        events_stream.withWatermark(ts_col, watermark),
-        user_col=user_col, ts_col=ts_col, value_col=value_col,
-        **({} if gap_minutes is None else {"gap_minutes": gap_minutes}))

@@ -903,71 +903,6 @@ CURATION_STAGES = ("ingest", "lang_id", "quality", "repetition",
                    "exact_dedup", "neardup", "decontaminate", "sample")
 
 
-def _curation_predicates(text_col: str) -> tuple:
-    """(keep_lang, keep_quality, keep_rep) Column predicates — the
-    per-doc map stages of the funnel, shared by curation_funnel and
-    curate so the rules cannot fork.  keep_lang is `any marker score
-    > 0`, equivalent to ``lang_id != 'und'`` (the argmax chain
-    returns 'und' iff every score is 0) but each marker count is
-    evaluated ONCE per row; keep_quality is text_quality's
-    bucket-'low' rule negated; keep_rep negates repetition_signals'
-    flag via the shared _rep_* fraction expressions."""
-    t = F.col(text_col)
-    keep_lang = None
-    for _, s in lang_scores(t):
-        cond = s > 0
-        keep_lang = cond if keep_lang is None else (keep_lang | cond)
-    words = F.split(t, " ")
-    nt = F.size(words)
-    keep_quality = (
-        (F.size(F.filter(words, _stopword_filter)).cast("double")
-         / nt > 0.05) | (nt >= 40))
-    keep_rep = ~((_rep_top2_frac(t) > REPETITION_TOP2_MAX)
-                 | (_rep_dup5_frac(t) > REPETITION_DUP5_MAX))
-    return keep_lang, keep_quality, keep_rep
-
-
-def _curation_join_stages(s3_lazy: DataFrame, bench: DataFrame,
-                          id_col: str, text_col: str,
-                          strata_col: str) -> tuple:
-    """(s4, s5, s6, s7) survivor frames after exact dedup, near-dup
-    prune, decontamination, stratified sample.  Each stage reads the
-    previous MATERIALIZED frame (at cluster scale these are the
-    frames a StageWriter run persists per stage); the final sample
-    is a pure filter and stays lazy."""
-    from pyspark.sql import Window
-
-    s3 = materialize_once(s3_lazy)
-    w = Window.partitionBy(F.md5(F.col(text_col)))
-    s4 = materialize_once(
-        s3.withColumn("_min_id", F.min(id_col).over(w))
-        .where(F.col(id_col) == F.col("_min_id")).drop("_min_id"))
-    s5 = materialize_once(
-        neardup_representatives(s4, id_col=id_col, text_col=text_col))
-    contam = contaminated_ids(s5, bench, id_col=id_col,
-                              text_col=text_col)
-    s6 = materialize_once(
-        s5.join(F.broadcast(contam), id_col, "left_anti"))
-    s7 = stratified_hash_sample(s6, key_col=id_col,
-                                strata_col=strata_col)
-    return s4, s5, s6, s7
-
-
-def curate(docs: DataFrame, id_col: str = "doc_id",
-           text_col: str = "text", strata_col: str = "lang",
-           bench_mod: int = DECONTAM_BENCH_MOD) -> DataFrame:
-    """The curated corpus itself — the docs surviving every
-    curation_funnel stage (same shared predicates and join stages;
-    curation_funnel is the per-stage count REPORT over the identical
-    chain).  Original columns, final-sample survivors."""
-    bench = docs.where(F.col(id_col) % bench_mod == 0)
-    corpus = docs.where(F.col(id_col) % bench_mod != 0)
-    keep_lang, keep_quality, keep_rep = _curation_predicates(text_col)
-    return _curation_join_stages(
-        corpus.where(keep_lang & keep_quality & keep_rep), bench,
-        id_col, text_col, strata_col)[3]
-
-
 def curation_funnel(docs: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", strata_col: str = "lang",
                     bench_mod: int = DECONTAM_BENCH_MOD) -> DataFrame:
@@ -1000,9 +935,25 @@ def curation_funnel(docs: DataFrame, id_col: str = "doc_id",
       frames a StageWriter run would persist per stage anyway;
     - the result is a UNION of eight 1-row aggregates: no driver-side
       loop, one DataFrame out."""
+    from pyspark.sql import Window
+
     bench = docs.where(F.col(id_col) % bench_mod == 0)
     corpus = docs.where(F.col(id_col) % bench_mod != 0)
-    keep_lang, keep_quality, keep_rep = _curation_predicates(text_col)
+    # the per-doc map stages: keep_quality is text_quality's
+    # bucket-'low' rule negated; keep_rep negates repetition_signals'
+    # flag via the shared _rep_* fraction expressions
+    t = F.col(text_col)
+    keep_lang = None
+    for _, score in lang_scores(t):
+        cond = score > 0
+        keep_lang = cond if keep_lang is None else (keep_lang | cond)
+    words = F.split(t, " ")
+    nt = F.size(words)
+    keep_quality = (
+        (F.size(F.filter(words, _stopword_filter)).cast("double")
+         / nt > 0.05) | (nt >= 40))
+    keep_rep = ~((_rep_top2_frac(t) > REPETITION_TOP2_MAX)
+                 | (_rep_dup5_frac(t) > REPETITION_DUP5_MAX))
 
     base = corpus.select(keep_lang.alias("_l"),
                          keep_quality.alias("_q0"),
@@ -1020,9 +971,20 @@ def curation_funnel(docs: DataFrame, id_col: str = "doc_id",
         "2, 'quality', c2, 3, 'repetition', c3) "
         "AS (stage_idx, stage, n_docs)"))
 
-    s4, s5, s6, s7 = _curation_join_stages(
-        corpus.where(keep_lang & keep_quality & keep_rep), bench,
-        id_col, text_col, strata_col)
+    s3 = materialize_once(
+        corpus.where(keep_lang & keep_quality & keep_rep))
+    w = Window.partitionBy(F.md5(F.col(text_col)))
+    s4 = materialize_once(
+        s3.withColumn("_min_id", F.min(id_col).over(w))
+        .where(F.col(id_col) == F.col("_min_id")).drop("_min_id"))
+    s5 = materialize_once(
+        neardup_representatives(s4, id_col=id_col, text_col=text_col))
+    contam = contaminated_ids(s5, bench, id_col=id_col,
+                              text_col=text_col)
+    s6 = materialize_once(
+        s5.join(F.broadcast(contam), id_col, "left_anti"))
+    s7 = stratified_hash_sample(s6, key_col=id_col,
+                                strata_col=strata_col)
 
     def stage_row(idx, name, frame):
         return frame.agg(F.count("*").alias("n_docs")).select(

@@ -54,6 +54,8 @@ def main():
     top = sorted(new_weights.items(), key=lambda kv: -abs(kv[1]))[:8]
     md = f"""# CONFIDENCE — retraining on the reference's labelled data
 
+Generated by `python scripts/confidence_demo.py`.
+
 Input: the reference's `data/training.tsv` — {len(insts)} labelled
 ScoredOllieExtractionInstance rows ({errors} parse errors), read
 entirely through this engine's codecs (graph pickles, part

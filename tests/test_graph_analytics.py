@@ -1,5 +1,5 @@
-"""PageRank / degree stats vs an independent driver-side model on a
-crafted graph exercising: weighted contribution split, parallel-edge
+"""PageRank vs an independent driver-side model on a crafted graph
+exercising: weighted contribution split, parallel-edge
 pre-aggregation, a dangling sink (mass redistribution), and an
 isolated-but-referenced vertex.  Plan/lineage discipline: the rank
 frame is checkpointed per round, so the final plan must not grow with
@@ -7,8 +7,7 @@ the iteration count (the iterative-lineage rule from linking CC)."""
 
 import pytest
 
-from ollie_spark.spark.graph_analytics import (PAGERANK_DAMPING,
-                                               degree_stats, pagerank)
+from ollie_spark.spark.graph_analytics import PAGERANK_DAMPING, pagerank
 
 # (src, dst, weight); b->a appears twice (parallel edges must merge);
 # d is a dangling sink; c receives from two sources
@@ -82,13 +81,6 @@ def test_pagerank_plan_does_not_grow_with_iterations(spark):
     # contribution sides — iteration count must not appear in the plan
     assert len(s6) <= len(s3) * 1.5
     assert s6.count("Scan ExistingRDD") == s3.count("Scan ExistingRDD")
-
-
-def test_degree_stats(spark):
-    got = {r.node: (r.out_degree, r.in_degree)
-           for r in degree_stats(_edges_df(spark)).collect()}
-    # parallel edges counted; d has no out-edges
-    assert got == {"a": (2, 2), "b": (3, 1), "c": (1, 2), "d": (0, 1)}
 
 
 def test_kg_pagerank_matches_model_on_real_kg(spark):

@@ -59,10 +59,13 @@ def test_build_graph_resumes_mid_run(spark, tmp_path):
     [],
     [("d1", [("image", None, "media://d1/0", 0),
              ("audio", None, "media://d1/1", 1)])],
-], ids=["empty", "all_media"])
+    [("d1", [("text", None, None, 0)])],
+    [("d1", None)],
+], ids=["empty", "all_media", "null_text", "null_spans"])
 def test_build_graph_degenerate_input_writes_typed_empty_stages(
         spark, tmp_path, rows):
-    """No text spans means zero rows in every stage.  A zero-row
+    """Nothing to extract from (no text spans, a NULL text, NULL
+    spans) means zero rows in every stage.  A zero-row
     partitioned write leaves no parquet file to read a schema from, so
     the stage must still land typed and empty: build_graph, read_graph
     and a resume all read it back."""

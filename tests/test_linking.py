@@ -9,7 +9,7 @@ from ollie_spark.spark.linking import (canonicalize, connected_components,
                                        entity_mentions, lsh_candidate_pairs,
                                        minhash_signature, normalize_entity,
                                        salted_join)
-from ollie_spark.spark.materialize import StageWriter
+from ollie_spark.spark.materialize import StageWriter, path_exists
 from ollie_spark.spark.nary import nary_extractions
 from ollie_spark.spark.pipeline import run_extraction
 
@@ -331,8 +331,8 @@ def test_stage_writer_manifest_rows_match_written_buckets(
 def test_stage_writer_resume_scheme_qualified_root(spark, mentions,
                                                    tmp_path):
     """r6: manifest probe must work on Hadoop-FS URIs, not just
-    driver-local paths — completed_buckets probes via spark.read
-    (AnalysisException = no manifest yet), so resume survives an
+    driver-local paths — completed_buckets probes via the Hadoop
+    FileSystem (materialize.path_exists), so resume survives an
     object-store root.  Exercised with an explicit file: scheme."""
     root = "file://" + str(tmp_path / "uri_root")
     w = StageWriter(spark, root, n_buckets=4)
@@ -345,6 +345,20 @@ def test_stage_writer_resume_scheme_qualified_root(spark, mentions,
     assert sorted(r["buckets"]) == [2, 3]
     assert spark.read.parquet(f"{root}/mentions/data").count() \
         == mentions.count()
+
+
+def test_path_exists_on_scheme_qualified_root(spark, tmp_path):
+    """path_exists answers through the Hadoop FileSystem of the path's
+    scheme: False before the directory exists, True after.  A manifest
+    directory with no parquet in it still reads as no buckets."""
+    root = "file://" + str(tmp_path / "probe_root")
+    assert not path_exists(spark, root)
+    (tmp_path / "probe_root" / "mentions" / "manifest").mkdir(
+        parents=True)
+    assert path_exists(spark, root)
+    assert path_exists(spark, f"{root}/mentions/manifest")
+    w = StageWriter(spark, root, n_buckets=4)
+    assert w.completed_buckets("mentions") == set()
 
 
 def test_canonicalize_merges_alias_surface_forms(spark):

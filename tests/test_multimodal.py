@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: media span extraction, feature UDF batch
-shape, determinism, resize/frame-sample stubs, ANN bucketing."""
+shape, determinism, ANN bucketing."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,8 +7,7 @@ from pyspark.sql import functions as F
 from ollie_spark.spark.corpus import corpus
 from ollie_spark.spark.multimodal import (FakeDecoder, EMBED_DIM,
                                           extract_media_features,
-                                          media_ann_buckets, media_spans,
-                                          resize_images, sample_frames)
+                                          media_ann_buckets, media_spans)
 
 
 @pytest.fixture(scope="module")
@@ -45,19 +44,6 @@ def test_feature_determinism(media):
     a = sorted(map(str, extract_media_features(media).collect()))
     b = sorted(map(str, extract_media_features(media).collect()))
     assert a == b
-
-
-def test_resize_and_frame_sample(spark, media):
-    feats = extract_media_features(media)
-    resized = resize_images(feats, 224, 224)
-    imgs = resized.where("kind = 'image'").collect()
-    assert all(r.width == 224 and r.height == 224 for r in imgs)
-    auds = resized.where("kind = 'audio'").collect()
-    assert all(r.width is None for r in auds)
-
-    sampled = sample_frames(feats, every_n=4)
-    vids = sampled.where("kind = 'video'").collect()
-    assert all(1 <= r.n_frames for r in vids)
 
 
 def test_media_ann_buckets(media):

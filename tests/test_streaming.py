@@ -149,153 +149,6 @@ def test_batch_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(out).where("batch_id = 0").count() == 5
 
 
-def test_dedup_stream_suppresses_redelivery(spark, tmp_path):
-    """A doc re-delivered in a later micro-batch (same doc_id, inside
-    the watermark) is emitted exactly once; fresh docs pass through."""
-    from ollie_spark.spark.streaming import dedup_documents_stream
-    in_dir = str(tmp_path / "redeliver_in")
-    schema = "doc_id long, text string, ts string"
-    b1 = [(1, "first doc", "2024-01-01 00:00:01"),
-          (2, "second doc", "2024-01-01 00:00:02")]
-    b2 = [(1, "first doc again", "2024-01-01 00:00:30"),   # re-delivery
-          (3, "third doc", "2024-01-01 00:00:31")]
-    spark.createDataFrame(b1, schema).write.mode("append") \
-        .parquet(in_dir)
-
-    stream = (spark.readStream.schema(schema).parquet(in_dir)
-              .withColumn("ingest_time", F.to_timestamp("ts")))
-    q = (dedup_documents_stream(stream)
-         .writeStream.format("memory").queryName("deduped")
-         .outputMode("append").trigger(processingTime="1 second")
-         .start())
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).write.mode("append") \
-            .parquet(in_dir)
-        q.processAllAvailable()
-        got = sorted(r.doc_id for r in
-                     spark.sql("select doc_id from deduped").collect())
-        assert got == [1, 2, 3]
-    finally:
-        q.stop()
-
-
-def test_source_running_stats_accumulates_across_batches(spark,
-                                                         tmp_path):
-    """applyInPandasWithState keeps per-source cumulative counts
-    across micro-batches (state survives the batch boundary)."""
-    from ollie_spark.spark.streaming import source_running_stats
-    in_dir = str(tmp_path / "stats_in")
-    schema = "doc_id long, text string, source string"
-    b1 = [(0, "aaaa", "src0"), (1, "bb", "src0"), (2, "cc", "src1")]
-    b2 = [(3, "dddddd", "src0")]
-    spark.createDataFrame(b1, schema).write.mode("append") \
-        .parquet(in_dir)
-
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    q = (source_running_stats(stream)
-         .writeStream.format("memory").queryName("srcstats")
-         .outputMode("update").trigger(processingTime="1 second")
-         .start())
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).write.mode("append") \
-            .parquet(in_dir)
-        q.processAllAvailable()
-        rows = spark.sql("select * from srcstats").collect()
-        latest = {}
-        for r in rows:           # update mode: last emit per source wins
-            if r.source not in latest or r.n_docs > latest[r.source][0]:
-                latest[r.source] = (r.n_docs, r.n_chars)
-        assert latest["src0"] == (3, 12)   # 4 + 2 + 6 chars, 3 docs
-        assert latest["src1"] == (1, 2)
-    finally:
-        q.stop()
-
-
-def test_curation_filter_stream_matches_batch_predicates(spark,
-                                                         tmp_path):
-    """The streamed survivor set equals the batch funnel's map-stage
-    filter on the same rows (cross-path equality over the shared
-    predicates), across two micro-batches."""
-    from ollie_spark.spark.streaming import curation_filter_stream
-    from ollie_spark.spark.textops import _curation_predicates
-    in_dir = str(tmp_path / "curation_in")
-    schema = "doc_id long, text string"
-    castle = ("the ancient castle stood on a tall hill above of the "
-              "winding river while birds flew in circles and it "
-              "rained softly")
-    b1 = [(1, "foo bar baz qux corge grault"),        # no markers
-          (2, "der hund lauft schnell heute morgen"),  # low quality
-          (4, "the quick brown fox jumps over a lazy dog near it "
-              "today")]
-    b2 = [(3, "the cat " * 9 + "the cat"),            # repetitive
-          (6, castle)]
-    spark.createDataFrame(b1, schema).write.mode("append") \
-        .parquet(in_dir)
-    stream = spark.readStream.schema(schema).parquet(in_dir)
-    q = (curation_filter_stream(stream)
-         .writeStream.format("memory").queryName("curated_stream")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        spark.createDataFrame(b2, schema).write.mode("append") \
-            .parquet(in_dir)
-        q.processAllAvailable()
-        got = sorted(r.doc_id for r in spark.sql(
-            "select doc_id from curated_stream").collect())
-    finally:
-        q.stop()
-    kl, kq, kr = _curation_predicates("text")
-    batch = spark.createDataFrame(b1 + b2, schema).where(kl & kq & kr)
-    assert got == sorted(r.doc_id for r in batch.collect())
-    assert got == [4, 6]
-
-
-def test_session_stats_stream_merges_across_batches(spark, tmp_path):
-    """A session spanning two micro-batches must merge in the state
-    store and emit ONCE (append mode) when the watermark passes its
-    end — equal to the batch temporal.session_stats on the same rows;
-    an event older than the watermark must be dropped, not reopen it."""
-    from ollie_spark.spark.streaming import session_stats_stream
-    from ollie_spark.spark.temporal import session_stats
-
-    in_dir = str(tmp_path / "events_in")
-    schema = "event_id long, user_id long, tss string, value double"
-    b1 = [(0, 1, "2024-01-01 00:00:00", 1.0),
-          (1, 1, "2024-01-01 00:20:00", 2.0)]
-    b2 = [(2, 1, "2024-01-01 00:40:00", 4.0)]     # extends b1's session
-    b3 = [(3, 2, "2024-01-01 12:00:00", 8.0)]     # watermark advancer
-    b4 = [(4, 1, "2024-01-01 00:50:00", 16.0)]    # too late: dropped
-
-    spark.createDataFrame(b1, schema).write.mode("append").parquet(in_dir)
-    stream = (spark.readStream.schema(schema).parquet(in_dir)
-              .withColumn("ts", F.to_timestamp("tss")))
-    q = (session_stats_stream(stream)
-         .writeStream.format("memory").queryName("sessions")
-         .outputMode("append").start())
-    try:
-        q.processAllAvailable()
-        for b in (b2, b3, b4):
-            spark.createDataFrame(b, schema).write.mode("append") \
-                .parquet(in_dir)
-            q.processAllAvailable()
-        got = [(r.user_id, r.session_start_us, r.session_end_us,
-                r.n_events, r.total_value)
-               for r in spark.sql("select * from sessions").collect()]
-    finally:
-        q.stop()
-
-    # exactly the closed u1 session: b1+b2 merged, late b4 NOT in it
-    batch = (spark.createDataFrame(b1 + b2, schema)
-             .withColumn("ts", F.to_timestamp("tss")))
-    want = [(r.user_id, r.session_start_us, r.session_end_us,
-             r.n_events, r.total_value)
-            for r in session_stats(batch).collect()]
-    assert got == want
-    assert got[0][3] == 3 and got[0][4] == 7.0
-
-
 def test_stream_link_accumulates_stable_ids(spark, tmp_path):
     """Continuous KG maintenance: batch 2's mentions of batch-1
     entities must resolve to the ORIGINAL node ids (no churn as the

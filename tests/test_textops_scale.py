@@ -581,36 +581,6 @@ def test_curation_funnel_planted_stages(spark):
     }
 
 
-def test_curate_returns_final_survivors(spark):
-    """curate() emits exactly the docs the funnel's final stage
-    counts, with original columns intact (same planted corpus as the
-    funnel test)."""
-    from ollie_spark.spark.textops import curate, curation_funnel
-    castle = ("the ancient castle stood on a tall hill above of the "
-              "winding river while birds flew in circles and it "
-              "rained softly")
-    dup = "the quick brown fox jumps over a lazy dog near it today"
-    rows = [
-        (0, "alpha beta gamma delta epsilon zeta eta theta iota "
-            "kappa lambda mu", "en"),
-        (1, "foo bar baz qux corge grault", "en"),
-        (2, "der hund lauft schnell heute morgen", "de"),
-        (3, "the cat " * 9 + "the cat", "en"),
-        (4, dup, "en"), (5, dup, "en"),
-        (6, castle, "en"), (7, castle + " yesterday", "en"),
-        (8, "the story of it goes alpha beta gamma delta epsilon "
-            "zeta eta theta and more words follow here now", "en"),
-    ]
-    d = spark.createDataFrame(rows, "doc_id long, text string, "
-                              "lang string")
-    out = curate(d)
-    assert out.columns == ["doc_id", "text", "lang"]
-    got = {r.doc_id for r in out.collect()}
-    n_sample = {r.stage: r.n_docs for r in curation_funnel(d).collect()
-                }["sample"]
-    assert got <= {4, 6} and len(got) == n_sample
-
-
 def test_repetition_signals_null_text_parity(spark):
     """A NULL-text doc yields NULL signals and a NULL flag in BOTH
     engines (the oracle's LEFT JOIN + CAST(bool AS INTEGER) mirrors
@@ -942,17 +912,20 @@ def test_leakage_split_cap_hole_is_observable(spark):
 
 
 def test_curation_to_training_pipeline_end_to_end(spark):
-    """The whole training-data story composes: curate() -> leakage-
-    safe split -> token-budget shard packing of the train side.  Pins
-    the cross-op column conventions and the packing invariants on the
-    composed (non-contiguous-id) frame: every train doc in exactly
-    one shard, inclusive cumsum consistent in doc_id order, shard
-    assignment by exclusive prefix."""
-    from ollie_spark.spark.textops import (SHARD_TOKEN_BUDGET, curate,
+    """The whole training-data story composes: curation (near-dup
+    prune -> stratified sample, the funnel's closing stages) ->
+    leakage-safe split -> token-budget shard packing of the train
+    side.  Pins the cross-op column conventions and the packing
+    invariants on the composed (non-contiguous-id) frame: every train
+    doc in exactly one shard, inclusive cumsum consistent in doc_id
+    order, shard assignment by exclusive prefix."""
+    from ollie_spark.spark.textops import (SHARD_TOKEN_BUDGET,
                                            leakage_safe_split,
-                                           pack_training_shards)
+                                           neardup_representatives,
+                                           pack_training_shards,
+                                           stratified_hash_sample)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    curated = curate(docs)
+    curated = stratified_hash_sample(neardup_representatives(docs))
     n_curated = curated.count()
     assert 0 < n_curated < docs.count()
     split = leakage_safe_split(curated)
