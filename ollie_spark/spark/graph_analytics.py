@@ -33,11 +33,8 @@ PAGERANK_DAMPING = 0.85
 PAGERANK_ITERATIONS = 10
 
 
-def pagerank(edges: DataFrame, src_col: str = "src_node",
-             dst_col: str = "dst_node", weight_col: str | None = "weight",
-             damping: float = PAGERANK_DAMPING,
-             iterations: int = PAGERANK_ITERATIONS,
-             caches_out: list | None = None) -> DataFrame:
+def pagerank(edges: DataFrame, weight_col: str | None = "weight",
+             iterations: int = PAGERANK_ITERATIONS) -> DataFrame:
     """Weighted PageRank by ``iterations`` rounds of power iteration;
     returns (node, rank) with ranks summing to 1.  Parallel edges are
     pre-aggregated; ``weight_col=None`` means unweighted (every edge
@@ -49,16 +46,8 @@ def pagerank(edges: DataFrame, src_col: str = "src_node",
     driver collect — and it is skipped entirely when the graph has no
     dangling vertices (one upfront count).  Superseded rank frames
     are unpersisted as soon as the next round materializes (the GraphX
-    discipline), so a run holds at most two rank frames; the static
-    frames (edges, transitions, vertices, dangling set) land in
-    ``caches_out`` — canonicalize's convention — for callers that run
-    pagerank repeatedly in one session."""
-    def _mat(df):
-        out = materialize_once(df)
-        if caches_out is not None:
-            caches_out.append(out)
-        return out
-
+    discipline), so a run holds at most two rank frames."""
+    damping = PAGERANK_DAMPING
     w = (F.col(weight_col).cast("double") if weight_col
          else F.lit(1.0))
     # non-positive weights are dropped BEFORE aggregation (r7, advisor
@@ -69,17 +58,17 @@ def pagerank(edges: DataFrame, src_col: str = "src_node",
     # edge simply is not an edge: its source (if it remains in the
     # graph at all) becomes dangling, and a vertex touching only
     # non-positive edges leaves the vertex set.
-    e = _mat(
-        edges.select(F.col(src_col).alias("_s"),
-                     F.col(dst_col).alias("_d"), w.alias("_w"))
+    e = materialize_once(
+        edges.select(F.col("src_node").alias("_s"),
+                     F.col("dst_node").alias("_d"), w.alias("_w"))
         .where(F.col("_w") > 0)
         .groupBy("_s", "_d").agg(F.sum("_w").alias("_w")))
     out_w = e.groupBy("_s").agg(F.sum("_w").alias("_ow"))
     # normalized edge transition fraction, computed once
-    trans = _mat(
+    trans = materialize_once(
         e.join(out_w, "_s").select(
             "_s", "_d", (F.col("_w") / F.col("_ow")).alias("_frac")))
-    verts = _mat(
+    verts = materialize_once(
         e.select(F.col("_s").alias("node"))
         .union(e.select(F.col("_d").alias("node"))).distinct())
     n = verts.count()
@@ -87,7 +76,7 @@ def pagerank(edges: DataFrame, src_col: str = "src_node",
         return verts.select("node", F.lit(1.0).alias("rank"))
     # dangling-node set, materialized once: the per-round dangling
     # term must not re-aggregate out-weights over the edge frame
-    dangling_nodes = _mat(
+    dangling_nodes = materialize_once(
         verts.join(out_w.select(F.col("_s").alias("node")),
                    "node", "left_anti"))
     any_dangling = dangling_nodes.count() > 0
@@ -121,10 +110,7 @@ def pagerank(edges: DataFrame, src_col: str = "src_node",
     return ranks
 
 
-def kg_training_pairs(edges: DataFrame, src_col: str = "src_node",
-                      rel_col: str = "rel", dst_col: str = "dst_node",
-                      bucket_hex: int = 1,
-                      caches_out: list | None = None) -> DataFrame:
+def kg_training_pairs(edges: DataFrame) -> DataFrame:
     """(src, rel, dst, label) training pairs for KG-embedding models
     (TransE-style): every distinct positive triple plus one FILTERED
     corrupted negative — the destination replaced by a pseudo-random
@@ -132,30 +118,25 @@ def kg_training_pairs(edges: DataFrame, src_col: str = "src_node",
     (false negatives poison embedding training).
 
     Fully deterministic and cross-engine recomputable: the corruption
-    is md5-keyed, never an RNG.  Each triple hashes to one of 16^
-    ``bucket_hex`` md5-prefix node buckets and takes the bucket node
+    is md5-keyed, never an RNG.  Each triple hashes to one of 16
+    one-hex-digit md5-prefix node buckets and takes the bucket node
     minimizing md5(node || triple-hash) — so the candidate join costs
-    |triples| x |nodes| / 16^bucket_hex, never a cross join and never
-    a globally indexed node table (row_number over nodes would be a
-    SinglePartition sort).  Raise ``bucket_hex`` as the node count
-    grows (16^3 buckets keeps the factor ~|nodes|/4096 at web scale;
-    the default 1 suits small graphs where wider prefixes would leave
-    empty buckets and triples without negatives — triples whose
-    bucket is empty yield no negative row, they do not error)."""
+    |triples| x |nodes| / 16, never a cross join and never a globally
+    indexed node table (row_number over nodes would be a
+    SinglePartition sort).  A wider prefix would suit web-scale node
+    counts; on small graphs it leaves empty buckets, and a triple
+    whose bucket is empty yields no negative row (it does not
+    error)."""
     sep = F.lit("\x1f")
     # pos feeds FIVE consumers (both node projections, the triple
     # hash, the anti-join, the final union) — materialize it once or
     # the edge-producing pipeline re-evaluates per consumer
     pos = materialize_once(
-        edges.select(F.col(src_col).alias("src"),
-                     F.col(rel_col).alias("rel"),
-                     F.col(dst_col).alias("dst")).distinct())
-    if caches_out is not None:
-        caches_out.append(pos)
+        edges.select(F.col("src_node").alias("src"), "rel",
+                     F.col("dst_node").alias("dst")).distinct())
     nodes = (pos.select(F.col("src").alias("node"))
              .union(pos.select(F.col("dst").alias("node"))).distinct()
-             .withColumn("_b", F.substring(F.md5("node"),
-                                           1, bucket_hex)))
+             .withColumn("_b", F.substring(F.md5("node"), 1, 1)))
     # F.concat, NOT concat_ws: concat_ws silently SKIPS null fields
     # where the DuckDB recompute's `||` propagates NULL — concat
     # matches the oracle (a null-field triple hashes to NULL, joins
@@ -163,7 +144,7 @@ def kg_training_pairs(edges: DataFrame, src_col: str = "src_node",
     tb = (pos.withColumn(
         "_th", F.md5(F.concat(F.col("src"), sep, F.col("rel"), sep,
                               F.col("dst"))))
-        .withColumn("_b", F.substring("_th", 1, bucket_hex)))
+        .withColumn("_b", F.substring("_th", 1, 1)))
     neg = (tb.join(nodes, "_b")
            .groupBy("src", "rel", "dst", "_th")
            .agg(F.min_by("node",

@@ -24,7 +24,7 @@ from .pipeline import run_extraction
 
 
 def build_graph(spark: SparkSession, documents: DataFrame, root: str,
-                n_buckets: int = 16, conf_threshold: float = 0.0) -> dict:
+                n_buckets: int = 16) -> dict:
     """Run every stage, resuming any stage whose manifest is partial.
 
     Returns per-stage metrics: {stage: {buckets, rows, wall_ms,
@@ -34,7 +34,7 @@ def build_graph(spark: SparkSession, documents: DataFrame, root: str,
     metrics = {}
 
     # stage 1: extraction (bucketed by doc_id)
-    mentions = run_extraction(documents, conf_threshold=conf_threshold)
+    mentions = run_extraction(documents)
     metrics["mentions"] = w.run_stage("mentions", mentions)
     mentions_t = w.read_stage("mentions")
 

@@ -50,6 +50,10 @@ NUM_HASHES = 16
 BANDS = 8
 JACCARD_THRESHOLD = 0.5            # char-3-gram pair verification
 LOCAL_BLOCKING_THRESHOLD = 2_000   # distinct norms; see _cluster
+# the mentions -> canonical link join (_link_join): broadcast the map up
+# to this many distinct entities, else salt it this many ways
+BROADCAST_MAP_THRESHOLD = 1_000_000
+SALT_WAYS = 8
 
 
 def normalize_entity(col):
@@ -85,19 +89,14 @@ def entity_mentions(mentions: DataFrame) -> DataFrame:
     return sides[0].unionByName(sides[1]).where(F.col("norm") != "")
 
 
-def minhash_signature(df: DataFrame, col: str = "norm") -> DataFrame:
-    """Add ``sig: array<bigint>`` — MinHash over char 3-gram shingles.
+def minhash_signature(df: DataFrame) -> DataFrame:
+    """Add ``sig: array<bigint>`` — MinHash over the char 3-gram
+    shingles of ``norm``.
 
     All map-side: shingling via transform(sequence(...)), each signature
     slot an array_min over seeded xxhash64.  No explode, no shuffle.
     """
-    c = F.col(col)
-    shingles = F.when(
-        F.length(c) < 3, F.array(c)
-    ).otherwise(
-        F.transform(F.sequence(F.lit(1), F.length(c) - 2),
-                    lambda i: c.substr(i, F.lit(3))))
-    df = df.withColumn("_shingles", F.array_distinct(shingles))
+    df = df.withColumn("_shingles", _char3_grams("norm"))
 
     # ONE aggregate pass computes all NUM_HASHES signature slots: the
     # accumulator is the running per-seed minimum array, each element
@@ -169,6 +168,9 @@ def lsh_candidate_pairs(entities: DataFrame,
 
 
 def _char3_grams(c: str):
+    """Distinct char 3-grams of a string column (the whole string when
+    shorter than 3) — the shingle set MinHash signs and Jaccard
+    verifies."""
     col = F.col(c)
     return F.array_distinct(F.when(
         F.length(col) < 3, F.array(col)
@@ -435,7 +437,7 @@ def _local_blocking_components(norms, max_bucket: int):
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,
-                salt: int = 8, keep_salt: bool = False,
+                salt: int = SALT_WAYS, keep_salt: bool = False,
                 salt_cols=None) -> DataFrame:
     """Equi-join where ``big`` is heavily skewed on ``key``: replicate
     ``small`` ``salt`` ways, spray ``big`` across the salt space so the
@@ -507,8 +509,8 @@ def _cluster(entities: DataFrame, n_entities: int,
     return connected_components(pairs, entities)
 
 
-def canonicalize(mentions: DataFrame, salt: int = 8,
-                 broadcast_map_threshold: int = 1_000_000,
+def canonicalize(mentions: DataFrame, salt: int = SALT_WAYS,
+                 broadcast_map_threshold: int = BROADCAST_MAP_THRESHOLD,
                  metrics_out: dict | None = None,
                  caches_out: list | None = None,
                  local_blocking_threshold: int = LOCAL_BLOCKING_THRESHOLD):
@@ -660,8 +662,6 @@ def _attach(bands: DataFrame, ref_bands: DataFrame,
 
 
 def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
-                     salt: int = 8,
-                     broadcast_map_threshold: int = 1_000_000,
                      max_bucket: int = 64,
                      metrics_out: dict | None = None,
                      caches_out: list | None = None,
@@ -808,8 +808,8 @@ def incremental_link(new_mentions: DataFrame, existing_map: DataFrame,
         metrics_out["n_exact"] = norms.count() - unknown.count()
         metrics_out["n_attached"] = attached.count()
         metrics_out["n_novel"] = n_novel
-    linked = _link_join(m_ann, full_map, n_map,
-                        broadcast_map_threshold, salt)
+    linked = _link_join(m_ann, full_map, n_map, BROADCAST_MAP_THRESHOLD,
+                        SALT_WAYS)
     return linked, delta_map
 
 
@@ -839,7 +839,7 @@ def _keyed_long_mentions(m: DataFrame):
 
 
 def _fused_salted_link(m: DataFrame, norm_to_node: DataFrame,
-                       salt: int = 8) -> DataFrame:
+                       salt: int) -> DataFrame:
     """Both arg lookups in ONE salted join: melt (row_key, side, norm)
     long, join the canonical map once, pivot the sides back, rejoin
     (see ``_keyed_long_mentions`` for the row-key construction)."""

@@ -125,8 +125,6 @@ class StageWriter:
         self.spark = spark
         self.root = str(root)
         self.n_buckets = n_buckets
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
 
     def _data(self, stage):
         return f"{self.root}/{stage}/data"
@@ -176,16 +174,18 @@ class StageWriter:
         return [b for b in range(self.n_buckets) if b not in done]
 
     def run_stage(self, stage: str, df: DataFrame,
-                  key: str = "doc_id", run_id: str | None = None,
+                  key: str = "doc_id",
                   buckets: list[int] | None = None) -> dict:
         """Process + write only the pending buckets of ``df``.
 
         Returns metrics {stage, buckets, rows, wall_ms, run_id}.
         Idempotent: a bucket present in the manifest is skipped; a
         bucket written but not yet in the manifest is safely
-        overwritten (dynamic partition overwrite).
+        overwritten (dynamic partition overwrite, set on this write
+        only: the session's ``partitionOverwriteMode`` is left as the
+        caller set it).
         """
-        run_id = run_id or uuid.uuid4().hex[:12]
+        run_id = uuid.uuid4().hex[:12]
         pending = buckets if buckets is not None \
             else self.pending_buckets(stage)
         if not pending:
@@ -229,6 +229,7 @@ class StageWriter:
 
         t0 = time.monotonic()
         (bucketed.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
          .partitionBy("bucket")
          .parquet(self._data(stage)))
         wall_ms = int((time.monotonic() - t0) * 1000)

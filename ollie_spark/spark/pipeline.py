@@ -373,15 +373,13 @@ def run_extraction(documents: DataFrame,
 
 
 def run_extraction_serialized(graphs_df: DataFrame,
-                              conf_threshold: float = 0.0,
                               text_col: str | None = None) -> DataFrame:
     """Pre-parsed corpus -> scored mentions: the --serialized pipeline
     end-to-end (deserialize + extract + score + filter).  Pass
     ``text_col`` to restore original sentence text onto the graphs
     (see extract_serialized)."""
     return _score_and_filter(
-        extract_serialized(graphs_df, text_col=text_col),
-        conf_threshold)
+        extract_serialized(graphs_df, text_col=text_col), 0.0)
 
 
 def extraction_errors(documents: DataFrame) -> DataFrame:

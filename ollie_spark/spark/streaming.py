@@ -25,13 +25,14 @@ from pyspark.sql import functions as F
 from .corpus import DOCUMENTS_SCHEMA
 from .pipeline import run_extraction
 
+MAX_FILES_PER_TRIGGER = 4
 
-def stream_documents(spark: SparkSession, input_dir: str,
-                     max_files_per_trigger: int = 4) -> DataFrame:
+
+def stream_documents(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-source stream over the documents table directory."""
     return (spark.readStream
             .schema(DOCUMENTS_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
             .parquet(input_dir))
 
 
@@ -49,8 +50,7 @@ def write_mention_batch(mentions: DataFrame, batch_id: int,
 
 
 def stream_extract(spark: SparkSession, input_dir: str,
-                   output_dir: str, checkpoint_dir: str,
-                   conf_threshold: float = 0.0):
+                   output_dir: str, checkpoint_dir: str):
     """documents stream -> mentions parquet, one micro-batch at a time.
 
     foreachBatch reuses the batch extraction pipeline verbatim; the
@@ -60,9 +60,8 @@ def stream_extract(spark: SparkSession, input_dir: str,
     docs = stream_documents(spark, input_dir)
 
     def process(batch_df: DataFrame, batch_id: int):
-        write_mention_batch(
-            run_extraction(batch_df, conf_threshold=conf_threshold),
-            batch_id, output_dir)
+        write_mention_batch(run_extraction(batch_df), batch_id,
+                            output_dir)
 
     return (docs.writeStream
             .foreachBatch(process)
@@ -71,16 +70,14 @@ def stream_extract(spark: SparkSession, input_dir: str,
             .start())
 
 
-def windowed_mention_rate(mentions_stream: DataFrame,
-                          event_time_col: str = "event_time",
-                          window: str = "1 minute",
-                          watermark: str = "2 minutes") -> DataFrame:
+def windowed_mention_rate(mentions_stream: DataFrame) -> DataFrame:
     """Watermarked event-time windowed aggregation over a mention
-    stream: mentions per (window, rel) with late rows accepted up to
-    the watermark and older ones dropped (state is bounded)."""
+    stream: mentions per (1-minute ``event_time`` window, rel) with
+    rows up to 2 minutes late accepted and older ones dropped (state
+    is bounded)."""
     return (mentions_stream
-            .withWatermark(event_time_col, watermark)
-            .groupBy(F.window(F.col(event_time_col), window)
+            .withWatermark("event_time", "2 minutes")
+            .groupBy(F.window(F.col("event_time"), "1 minute")
                      .alias("win"),
                      F.col("rel_text"))
             .agg(F.count("*").alias("n_mentions"))
@@ -159,7 +156,7 @@ def link_mention_batch(batch_df: DataFrame, batch_id: int,
 
 def stream_link(spark: SparkSession, input_dir: str, schema: str,
                 map_dir: str, linked_dir: str, checkpoint_dir: str,
-                max_files_per_trigger: int = 4):
+                max_files_per_trigger: int = MAX_FILES_PER_TRIGGER):
     """Continuous KG maintenance: a mention stream incrementally
     linked against an accumulating canonical map (stream_extract's
     output directory is a valid ``input_dir``).  Per micro-batch the

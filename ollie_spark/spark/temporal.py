@@ -37,62 +37,55 @@ def epoch_us(col: str | Column) -> Column:
         c.cast("timestamp_ntz"))
 
 
-def sessionize(events: DataFrame, user_col: str = "user_id",
-               ts_col: str = "ts", id_col: str = "event_id",
-               gap_minutes: int = SESSION_GAP_MINUTES) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Per-user session ids: a new session starts at a user's first
     event and whenever the gap from their previous event exceeds
-    ``gap_minutes``; ``session_id`` is the 1-based running count of
-    session starts in (ts, id) order.
+    ``SESSION_GAP_MINUTES``; ``session_id`` is the 1-based running
+    count of session starts in (ts, event_id) order.
 
     Two stacked windows share one partitioning+ordering (the lag flag,
     then its running sum), so Catalyst plans ONE exchange + one sort
     with two Window operators — no second shuffle."""
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    us = epoch_us(ts_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = epoch_us("ts")
     prev = F.lag(us).over(w)
     flagged = events.select(
-        id_col, user_col, ts_col,
+        "event_id", "user_id", "ts",
         (prev.isNull()
-         | ((us - prev) > gap_minutes * 60_000_000))
+         | ((us - prev) > SESSION_GAP_MINUTES * 60_000_000))
         .cast("long").alias("_new_session"))
     return flagged.select(
-        id_col, user_col, ts_col,
+        "event_id", "user_id", "ts",
         F.sum("_new_session").over(w).cast("bigint")
         .alias("session_id"))
 
 
-def asof_attach(events: DataFrame, match_type: str = "purchase",
-                user_col: str = "user_id", ts_col: str = "ts",
-                id_col: str = "event_id", type_col: str = "event_type",
-                value_col: str = "value") -> DataFrame:
+def asof_attach(events: DataFrame) -> DataFrame:
     """As-of join expressed as a partitioned window: attach to every
-    event the ``value_col`` of the user's most recent STRICTLY PRIOR
-    ``match_type`` event (NULL when none).  ``last(..., ignorenulls)``
+    event the ``value`` of the user's most recent STRICTLY PRIOR
+    ``purchase`` event (NULL when none).  ``last(..., ignorenulls)``
     over ROWS UNBOUNDED PRECEDING..1 PRECEDING is the shuffle-minimal
     spelling of the as-of semantics — a range self-join would be
     O(events x per-user-events) and a global sort a SinglePartition;
     this is one hashpartitioning(user) exchange."""
-    w = (Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
          .rowsBetween(Window.unboundedPreceding, -1))
     prior = F.last(
-        F.when(F.col(type_col) == match_type, F.col(value_col)),
+        F.when(F.col("event_type") == "purchase", F.col("value")),
         ignorenulls=True).over(w)
     return events.select(
-        id_col, user_col, type_col,
-        prior.alias(f"last_{match_type}_value"))
+        "event_id", "user_id", "event_type",
+        prior.alias("last_purchase_value"))
 
 
-def _dec_sum(value_col: str) -> Column:
-    """Exact-decimal sum cast back to double — the repo's bit-parity
-    convention for double sums compared against DuckDB."""
-    return (F.sum(F.col(value_col).cast("decimal(18,4)")).cast("double")
+def _dec_sum() -> Column:
+    """Exact-decimal sum of ``value`` cast back to double — the repo's
+    bit-parity convention for double sums compared against DuckDB."""
+    return (F.sum(F.col("value").cast("decimal(18,4)")).cast("double")
             .alias("total_value"))
 
 
-def session_stats(events: DataFrame, user_col: str = "user_id",
-                  ts_col: str = "ts", value_col: str = "value",
-                  gap_minutes: int = SESSION_GAP_MINUTES) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Per-user session aggregates via Spark's NATIVE
     ``session_window`` (the streaming-capable gap-merge operator, also
     the batch spelling here).  The engine's merge is end-INCLUSIVE: an
@@ -105,45 +98,38 @@ def session_stats(events: DataFrame, user_col: str = "user_id",
 
     One hashpartitioning(user, session_window) exchange after a
     map-side partial merge — no per-user global sort."""
-    sw = F.session_window(ts_col, f"{gap_minutes} minutes")
-    return (events.groupBy(user_col, sw.alias("w"))
-            .agg(F.count("*").alias("n_events"), _dec_sum(value_col))
-            .select(user_col,
+    sw = F.session_window("ts", f"{SESSION_GAP_MINUTES} minutes")
+    return (events.groupBy("user_id", sw.alias("w"))
+            .agg(F.count("*").alias("n_events"), _dec_sum())
+            .select("user_id",
                     epoch_us(F.col("w.start")).alias("session_start_us"),
                     epoch_us(F.col("w.end")).alias("session_end_us"),
                     "n_events", "total_value"))
 
 
-def tumbling_rollup(events: DataFrame, ts_col: str = "ts",
-                    key_col: str = "event_type",
-                    value_col: str = "value",
-                    window_minutes: int = TUMBLING_WINDOW_MINUTES
-                    ) -> DataFrame:
-    """Fixed (tumbling) event-time windows per key: Spark's native
-    ``window()`` — epoch-aligned on the NTZ wall clock, so the bucket
-    start is exactly ``floor(epoch_us / width) * width``; pure
+def _window_rollup(events: DataFrame, w: Column) -> DataFrame:
+    """Per-(event-time window, event type) count and value sum."""
+    return (events.groupBy(w.alias("w"), "event_type")
+            .agg(F.count("*").alias("n_events"), _dec_sum())
+            .select(epoch_us(F.col("w.start")).alias("window_start_us"),
+                    "event_type", "n_events", "total_value"))
+
+
+def tumbling_rollup(events: DataFrame) -> DataFrame:
+    """Fixed (tumbling) event-time windows per event type: Spark's
+    native ``window()`` — epoch-aligned on the NTZ wall clock, so the
+    bucket start is exactly ``floor(epoch_us / width) * width``; pure
     partial+final hash aggregation, one exchange."""
-    w = F.window(ts_col, f"{window_minutes} minutes")
-    return (events.groupBy(w.alias("w"), key_col)
-            .agg(F.count("*").alias("n_events"), _dec_sum(value_col))
-            .select(epoch_us(F.col("w.start")).alias("window_start_us"),
-                    key_col, "n_events", "total_value"))
+    return _window_rollup(
+        events, F.window("ts", f"{TUMBLING_WINDOW_MINUTES} minutes"))
 
 
-def hopping_rollup(events: DataFrame, ts_col: str = "ts",
-                   key_col: str = "event_type",
-                   value_col: str = "value",
-                   window_minutes: int = 2 * HOPPING_SLIDE_MINUTES,
-                   slide_minutes: int = HOPPING_SLIDE_MINUTES
-                   ) -> DataFrame:
-    """Hopping (sliding) event-time windows: each event lands in
-    ``window/slide`` overlapping buckets — Spark expands them with an
-    internal explode BEFORE the aggregation, so the shuffle carries
-    the already-combined partials, not window/slide copies of the raw
-    events."""
-    w = F.window(ts_col, f"{window_minutes} minutes",
-                 f"{slide_minutes} minutes")
-    return (events.groupBy(w.alias("w"), key_col)
-            .agg(F.count("*").alias("n_events"), _dec_sum(value_col))
-            .select(epoch_us(F.col("w.start")).alias("window_start_us"),
-                    key_col, "n_events", "total_value"))
+def hopping_rollup(events: DataFrame) -> DataFrame:
+    """Hopping (sliding) event-time windows of ``2 *
+    HOPPING_SLIDE_MINUTES``: each event lands in two overlapping
+    buckets — Spark expands them with an internal explode BEFORE the
+    aggregation, so the shuffle carries the already-combined partials,
+    not two copies of the raw events."""
+    return _window_rollup(
+        events, F.window("ts", f"{2 * HOPPING_SLIDE_MINUTES} minutes",
+                         f"{HOPPING_SLIDE_MINUTES} minutes"))

@@ -95,29 +95,29 @@ def word_shingles(text_col, n: int = 3) -> Column:
             F.transform(F.array(F.split(text_col, " ")), shingles), 1))
 
 
-def minhash_sig(text_col, seeds=MINHASH_SEEDS, shingle_n: int = 3) -> Column:
+def minhash_sig(text_col) -> Column:
     """``array<string>`` of per-seed md5-minhashes in ONE aggregate
     pass over the shingle array (the linking minhash-fold discipline,
     linking.py:minhash_signature): the accumulator holds the running
-    per-seed lexicographic minima, each shingle contributes its
-    len(seeds) seeded digests via zip_with/least.  Identical values to
-    the per-seed ``array_min(transform(...))`` form it replaced, but
-    the shingle array — the expensive part — is walked once instead of
-    once per seed.  The init sentinel 'g' sorts above every hex digest,
+    per-seed lexicographic minima, each word 3-gram shingle
+    contributes its len(MINHASH_SEEDS) seeded digests via
+    zip_with/least.  Identical values to the per-seed
+    ``array_min(transform(...))`` form it replaced, but the shingle
+    array — the expensive part — is walked once instead of once per
+    seed.  The init sentinel 'g' sorts above every hex digest,
     and the shingle array is never empty (split of '' yields [''])."""
-    sh = word_shingles(text_col, shingle_n)
-    init = F.array(*[F.lit("g") for _ in seeds])
+    sh = word_shingles(text_col, 3)
+    init = F.array(*[F.lit("g") for _ in MINHASH_SEEDS])
     return F.aggregate(
         sh, init,
         lambda acc, s: F.zip_with(
             acc,
             F.array(*[F.md5(F.concat(s, F.lit(f"#{seed}")))
-                      for seed in seeds]),
+                      for seed in MINHASH_SEEDS]),
             lambda a, h: F.least(a, h)))
 
 
-def _minhash_banded(docs: DataFrame, id_col: str,
-                    text_col: str) -> DataFrame:
+def _minhash_banded(docs: DataFrame) -> DataFrame:
     # signature lands in its own projection and the band keys reference
     # it as a column, then ONE explode emits both bands — the former
     # two-select union evaluated the whole signature pipeline once per
@@ -127,9 +127,9 @@ def _minhash_banded(docs: DataFrame, id_col: str,
     # spread_small_scan floor here as NEUTRAL — the residual cost is
     # per-process plan analysis, not map work — so the input is left
     # untouched rather than adding an exchange for nothing.)
-    d = docs.select(id_col, minhash_sig(F.col(text_col)).alias("_sig"))
+    d = docs.select("doc_id", minhash_sig(F.col("text")).alias("_sig"))
     return d.select(
-        id_col,
+        "doc_id",
         F.explode(F.array(
             F.concat_ws("|", F.element_at("_sig", 1),
                         F.element_at("_sig", 2)),
@@ -137,8 +137,7 @@ def _minhash_banded(docs: DataFrame, id_col: str,
                         F.element_at("_sig", 4)))).alias("band_key"))
 
 
-def minhash_band_pairs(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
+def minhash_band_pairs(docs: DataFrame,
                        max_bucket: int = DEFAULT_MAX_BAND_BUCKET,
                        metrics_out: dict | None = None) -> DataFrame:
     """MinHash+LSH near-duplicate document pairs: 4 hashes, 2 bands of
@@ -155,15 +154,15 @@ def minhash_band_pairs(docs: DataFrame, id_col: str = "doc_id",
     # both sides makes Spark compute the minhash signature pipeline
     # (and re-scan the source) independently per side — at web scale
     # the signature map dominates the dedup stage, so that doubles it
-    banded, dropped = cap_blocks(_minhash_banded(docs, id_col, text_col),
-                                 ["band_key"], max_bucket)
+    banded, dropped = cap_blocks(_minhash_banded(docs), ["band_key"],
+                                 max_bucket)
     if metrics_out is not None:
         metrics_out["dropped_bands"] = dropped
     a, b = banded.alias("a"), banded.alias("b")
     return (a.join(b, "band_key")
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(F.col(f"a.{id_col}").alias("doc_a"),
-                    F.col(f"b.{id_col}").alias("doc_b"))
+            .where(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
             .distinct())
 
 
@@ -376,9 +375,9 @@ def lang_id(text_col) -> Column:
     return _argmax_chain(lang_scores(text_col))
 
 
-def with_lang_id(df: DataFrame, text_col: str = "text",
-                 out_col: str = "pred_lang") -> DataFrame:
-    """``df`` + ``out_col`` predicted-language column, score-once shape.
+def with_lang_id(df: DataFrame) -> DataFrame:
+    """``df`` + ``pred_lang``, the language predicted from ``text``, in
+    the score-once shape.
 
     Scores land in an intermediate projection and the argmax CASE
     references them as columns, so the physical plan evaluates each
@@ -386,13 +385,13 @@ def with_lang_id(df: DataFrame, text_col: str = "text",
     evaluations per row vs ~20 for the inlined single-column form) —
     the difference between one and five text tokenizations per
     document at 100 TB."""
-    scores = lang_scores(F.col(text_col))
+    scores = lang_scores(F.col("text"))
     tmp = [f"_langscore_{lang}" for lang, _ in scores]
     scored = df.select("*", *[s.alias(t)
                               for (_, s), t in zip(scores, tmp)])
     chain = _argmax_chain([(lang, F.col(t))
                            for (lang, _), t in zip(scores, tmp)])
-    return scored.select(*df.columns, chain.alias(out_col))
+    return scored.select(*df.columns, chain.alias("pred_lang"))
 
 
 def lang_id_oracle_sql(text_expr: str = "text") -> str:
@@ -431,10 +430,10 @@ def token_counts_from_words(words) -> tuple:
         sub.alias("subword_tokens")
 
 
-def doc_fingerprint(text_col, gram: int = 5) -> Column:
+def doc_fingerprint(text_col) -> Column:
     """Rolling-hash-style document fingerprint: min md5 of word
-    n-grams."""
-    grams = word_shingles(text_col, gram)
+    5-grams."""
+    grams = word_shingles(text_col, 5)
     return F.array_min(F.transform(grams, lambda g: F.md5(g)))
 
 
@@ -522,12 +521,10 @@ def probe_cells(vec_col, bits: int) -> Column:
 
 
 def embedding_neardup_pairs(vecs: DataFrame, threshold: float = 0.62,
-                            id_col: str = "vec_id",
-                            vec_col: str = "emb",
                             bits: int | None = None,
-                            multi_probe: bool = True,
-                            dim: int | None = None) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, sign-cell blocked.
+                            multi_probe: bool = True) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs over (``vec_id``, ``emb``)
+    rows, sign-cell blocked.
 
     The library scale path: ``bits`` defaults to ``auto_cell_bits`` of
     the corpus size (one count job), so cell population — and with it
@@ -552,14 +549,13 @@ def embedding_neardup_pairs(vecs: DataFrame, threshold: float = 0.62,
         vecs = materialize_once(vecs)
         probe = vecs.agg(
             F.count("*").alias("n"),
-            F.max(F.size(vec_col)).alias("d")).first()
-        if dim is None:
-            # max over the corpus: null-safe (agg skips null vectors)
-            # and deterministic, unlike first() on an unordered frame
-            dim = int(probe["d"]) if probe["d"] is not None else 4
+            F.max(F.size("emb")).alias("d")).first()
+        # max over the corpus: null-safe (agg skips null vectors) and
+        # deterministic, unlike first() on an unordered frame
+        dim = int(probe["d"]) if probe["d"] is not None else 4
         bits = auto_cell_bits(probe["n"], dim=dim)
-        base = (vecs.withColumn("_cell", sign_cell(F.col(vec_col), bits))
-                .withColumn("_nrm", l2norm(F.col(vec_col))))
+        base = (vecs.withColumn("_cell", sign_cell(F.col("emb"), bits))
+                .withColumn("_nrm", l2norm(F.col("emb"))))
     else:
         # explicit bits: one materialization of the cell frame — the
         # probe side derives from the same frame, so without this the
@@ -568,11 +564,11 @@ def embedding_neardup_pairs(vecs: DataFrame, threshold: float = 0.62,
         # is stored alongside the cell (r7): the former per-pair
         # cosine recomputed both norms once per candidate partner.
         base = materialize_once(
-            vecs.withColumn("_cell", sign_cell(F.col(vec_col), bits))
-            .withColumn("_nrm", l2norm(F.col(vec_col))))
+            vecs.withColumn("_cell", sign_cell(F.col("emb"), bits))
+            .withColumn("_nrm", l2norm(F.col("emb"))))
     if multi_probe:
         probed = base.withColumn(
-            "_probe", F.explode(probe_cells(F.col(vec_col), bits)))
+            "_probe", F.explode(probe_cells(F.col("emb"), bits)))
         a = probed.alias("a")
         b = base.alias("b")
         joined = a.join(b, F.col("a._probe") == F.col("b._cell"))
@@ -583,13 +579,13 @@ def embedding_neardup_pairs(vecs: DataFrame, threshold: float = 0.62,
     # divided by the product of the same sqrt-of-sum-of-squares values
     # — but the norms come from the per-row _nrm column instead of
     # being re-aggregated per candidate pair
-    cos = F.round(dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+    cos = F.round(dot(F.col("a.emb"), F.col("b.emb"))
                   / (F.col("a._nrm") * F.col("b._nrm")), 4)
     return (joined
-            .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            .where(F.col("a.vec_id") < F.col("b.vec_id"))
             .where(cos >= threshold)
-            .select(F.col(f"a.{id_col}").alias("vec_a"),
-                    F.col(f"b.{id_col}").alias("vec_b"),
+            .select(F.col("a.vec_id").alias("vec_a"),
+                    F.col("b.vec_id").alias("vec_b"),
                     cos.alias("cosine"))
             .distinct())
 
@@ -620,14 +616,13 @@ def rate_to_hex_threshold(rate: float) -> str:
                   f"0{_HEX_W}x")
 
 
-def stratified_hash_sample(df: DataFrame, key_col: str = "doc_id",
-                           strata_col: str = "lang",
+def stratified_hash_sample(df: DataFrame,
                            rates: dict | None = None,
                            default_rate: float = STRATIFIED_DEFAULT_RATE
                            ) -> DataFrame:
     """Deterministic per-stratum downsampling for training-data
-    curation: keep a row iff the md5 of its key falls under the
-    stratum's hex threshold.
+    curation: keep a row iff the md5 of its ``doc_id`` falls under the
+    hex threshold of its ``lang`` stratum.
 
     Spark's ``df.sample`` is seed-stable only per partitioning; a
     content-hash cutoff is stable under ANY repartition, resume, or
@@ -637,16 +632,15 @@ def stratified_hash_sample(df: DataFrame, key_col: str = "doc_id",
     codegen), no shuffle, survives pushdown ordering — the scan still
     prunes columns."""
     rates = STRATIFIED_RATES if rates is None else rates
-    h = F.substring(F.md5(F.col(key_col).cast("string")), 1, _HEX_W)
+    h = F.substring(F.md5(F.col("doc_id").cast("string")), 1, _HEX_W)
     thr = F.lit(rate_to_hex_threshold(default_rate))
     for stratum, rate in sorted(rates.items()):
-        thr = F.when(F.col(strata_col) == stratum,
+        thr = F.when(F.col("lang") == stratum,
                      F.lit(rate_to_hex_threshold(rate))).otherwise(thr)
     return df.where(h < thr)
 
 
-def neardup_representatives(docs: DataFrame, id_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
+def neardup_representatives(docs: DataFrame) -> DataFrame:
     """Near-dup pruning keep-rule over the MinHash+LSH pair set: drop
     every doc that is the GREATER member of some near-dup pair, keep
     the rest.  The min-id member of each duplicate pair survives (the
@@ -657,13 +651,12 @@ def neardup_representatives(docs: DataFrame, id_col: str = "doc_id",
     Shape at scale: the pair set is orders of magnitude smaller than
     the corpus (capped band join), so the anti-join broadcasts its
     dropped-id side; the corpus never shuffles."""
-    pairs = minhash_band_pairs(docs, id_col=id_col, text_col=text_col)
-    dropped = pairs.select(F.col("doc_b").alias(id_col)).distinct()
-    return docs.join(F.broadcast(dropped), id_col, "left_anti")
+    pairs = minhash_band_pairs(docs)
+    dropped = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+    return docs.join(F.broadcast(dropped), "doc_id", "left_anti")
 
 
-def corpus_term_stats(docs: DataFrame, text_col: str = "text",
-                      top_k: int = 20) -> DataFrame:
+def corpus_term_stats(docs: DataFrame, top_k: int = 20) -> DataFrame:
     """Top-k corpus terms by document frequency, with IDF — the
     vocabulary/statistics pass of a training-data pipeline.
 
@@ -673,7 +666,7 @@ def corpus_term_stats(docs: DataFrame, text_col: str = "text",
     counts), the total-N agg is one row broadcast back, and top-k is
     TakeOrdered — no global sort materializes the vocabulary."""
     per_doc = docs.select(F.explode(
-        F.array_distinct(F.split(F.col(text_col), " "))).alias("term"))
+        F.array_distinct(F.split(F.col("text"), " "))).alias("term"))
     term_df = (per_doc.where(F.col("term") != "")
                .groupBy("term").agg(F.count("*").alias("df")))
     n = docs.agg(F.count("*").alias("_n"))
@@ -688,12 +681,10 @@ DECONTAM_NGRAM = 8        # flag on any shared 8-word span
 DECONTAM_BENCH_MOD = 97   # q27 demo benchmark slice: doc_id % 97 == 0
 
 
-def contaminated_ids(docs: DataFrame, benchmark: DataFrame,
-                     n: int = DECONTAM_NGRAM, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
+def contaminated_ids(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: ids of corpus docs sharing any
-    n-word span with a benchmark/eval document — the docs a training
-    run must drop so the benchmark stays honest.
+    ``DECONTAM_NGRAM``-word span with a benchmark/eval document — the
+    docs a training run must drop so the benchmark stays honest.
 
     Shape at scale: benchmark suites are tiny next to a training
     corpus (MBs of n-grams vs 100 TB), so the distinct benchmark
@@ -702,14 +693,16 @@ def contaminated_ids(docs: DataFrame, benchmark: DataFrame,
     distinct is over flagged ids only (a small fraction).  Shingling
     is the O(len) let-bound ``word_shingles``."""
     bench_sh = (benchmark
-                .select(F.explode(word_shingles(F.col(text_col), n))
+                .select(F.explode(word_shingles(F.col("text"),
+                                                DECONTAM_NGRAM))
                         .alias("sh"))
                 .distinct())
     doc_sh = docs.select(
-        id_col,
-        F.explode(word_shingles(F.col(text_col), n)).alias("sh"))
+        "doc_id",
+        F.explode(word_shingles(F.col("text"), DECONTAM_NGRAM))
+        .alias("sh"))
     return (doc_sh.join(F.broadcast(bench_sh), "sh", "left_semi")
-            .select(id_col).distinct())
+            .select("doc_id").distinct())
 
 
 REPETITION_TOP2_MAX = 0.20   # flag above this top-2-gram word fraction
@@ -753,8 +746,7 @@ def _rep_dup5_frac(t) -> Column:
     return F.round(1.0 - F.size(F.array_distinct(s5)) / F.size(s5), 4)
 
 
-def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def repetition_signals(docs: DataFrame) -> DataFrame:
     """Gopher-style per-document repetition signals — the repetition
     slice of an LLM training-data quality filter (Rae et al. 2021,
     "Scaling Language Models", Table A1: fraction of the document
@@ -780,11 +772,11 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
     (the CollapseProject discipline: a CASE over multi-referenced
     non-cheap aliases stays materialized; inlining would re-run the
     fold per branch)."""
-    t = F.col(text_col)
+    t = F.col("text")
     frac2 = _rep_top2_frac(t)
     dup5 = _rep_dup5_frac(t)
     scored = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(F.split(t, " ")).cast("long").alias("n_words"),
         frac2.alias("top_2gram_frac"),
         dup5.alias("dup_5gram_frac"))
@@ -798,9 +790,7 @@ def repetition_signals(docs: DataFrame, id_col: str = "doc_id",
 TFIDF_TOP_K = 3
 
 
-def tfidf_keywords(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   k: int = TFIDF_TOP_K) -> DataFrame:
+def tfidf_keywords(docs: DataFrame, k: int = TFIDF_TOP_K) -> DataFrame:
     """Per-document top-k TF-IDF keywords — the keyword/topic tagging
     pass of a training-data pipeline (and the per-doc complement of
     ``corpus_term_stats``' corpus-level vocabulary view).
@@ -816,13 +806,13 @@ def tfidf_keywords(docs: DataFrame, id_col: str = "doc_id",
     never a global sort."""
     from pyspark.sql import Window
 
-    words = F.split(F.col(text_col), " ")
-    toks = (docs.select(F.col(id_col), F.size(words).alias("n_toks"),
+    words = F.split(F.col("text"), " ")
+    toks = (docs.select(F.col("doc_id"), F.size(words).alias("n_toks"),
                         F.explode(words).alias("term"))
             .where(F.col("term") != ""))
-    tf = (toks.groupBy(id_col, "term", "n_toks")
+    tf = (toks.groupBy("doc_id", "term", "n_toks")
           .agg(F.count("*").alias("c")))
-    dfreq = (docs.select(F.col(id_col),
+    dfreq = (docs.select(F.col("doc_id"),
                          F.explode(F.array_distinct(words))
                          .alias("term"))
              .where(F.col("term") != "")
@@ -830,13 +820,13 @@ def tfidf_keywords(docs: DataFrame, id_col: str = "doc_id",
     n = docs.agg(F.count("*").alias("_n"))
     scored = (tf.join(F.broadcast(dfreq), "term")
               .crossJoin(F.broadcast(n))
-              .select(F.col(id_col), "term",
+              .select(F.col("doc_id"), "term",
                       F.round((F.col("c") / F.col("n_toks"))
                               * F.log(F.col("_n").cast("double")
                                       / F.col("df")), 6)
                       .alias("score")))
-    w = Window.partitionBy(id_col).orderBy(F.desc("score"),
-                                           F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("score"),
+                                             F.asc("term"))
     return (scored.select("*", F.row_number().over(w).cast("long")
                           .alias("kw_rank"))
             .where(F.col("kw_rank") <= k))
@@ -847,15 +837,13 @@ BM25_B = 0.75      # length-normalization strength (standard default)
 BM25_TOP_K = 20
 
 
-def bm25_search(docs: DataFrame, query_terms: tuple,
-                id_col: str = "doc_id", text_col: str = "text",
-                k1: float = BM25_K1, b: float = BM25_B,
-                k: int = BM25_TOP_K) -> DataFrame:
+def bm25_search(docs: DataFrame, query_terms: tuple) -> DataFrame:
     """BM25 ranked retrieval over the corpus for a fixed term set —
     the inspect/decontaminate companion to ``tfidf_keywords`` (find
     the documents most about a benchmark's vocabulary).  Okapi BM25
     with the Lucene idf: ln((N - df + .5)/(df + .5) + 1), so idf is
-    never negative.
+    never negative.  k1 and b are ``BM25_K1`` and ``BM25_B``; the top
+    ``BM25_TOP_K`` documents are returned.
 
     Shape at scale: the corpus is TOKENIZED ONCE — the token explode
     filters to the QUERY TERMS immediately, so the tf shuffle carries
@@ -872,40 +860,39 @@ def bm25_search(docs: DataFrame, query_terms: tuple,
     # let-bind the split: size() and explode() both reference the
     # alias, so the split runs once per row (CollapseProject keeps
     # multi-referenced non-cheap aliases materialized)
-    words_of = docs.select(F.col(id_col),
-                           F.split(F.col(text_col), " ").alias("_w"))
+    words_of = docs.select(F.col("doc_id"),
+                           F.split(F.col("text"), " ").alias("_w"))
     tf = materialize_once(
-        words_of.select(F.col(id_col), F.size("_w").alias("n_toks"),
+        words_of.select(F.col("doc_id"), F.size("_w").alias("n_toks"),
                         F.explode("_w").alias("term"))
         .where(F.col("term").isin(terms))
-        .groupBy(id_col, "term", "n_toks")
+        .groupBy("doc_id", "term", "n_toks")
         .agg(F.count("*").alias("c")))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     stats = docs.agg(
         F.count("*").alias("_n"),
-        F.avg(F.size(F.split(F.col(text_col), " "))).alias("_avgdl"))
+        F.avg(F.size(F.split(F.col("text"), " "))).alias("_avgdl"))
     idf = F.log((F.col("_n") - F.col("df") + 0.5)
                 / (F.col("df") + 0.5) + 1.0)
+    k1, b = BM25_K1, BM25_B
     norm = (F.col("c") + k1 * (1.0 - b
                                + b * F.col("n_toks") / F.col("_avgdl")))
     scored = (tf.join(F.broadcast(dfreq), "term")
               .crossJoin(F.broadcast(stats))
-              .select(F.col(id_col),
+              .select(F.col("doc_id"),
                       (idf * F.col("c") * (k1 + 1.0) / norm).alias("s")))
-    return (scored.groupBy(id_col)
+    return (scored.groupBy("doc_id")
             .agg(F.round(F.sum("s"), 6).alias("bm25"),
                  F.count("*").alias("n_terms_matched"))
-            .orderBy(F.desc("bm25"), F.asc(id_col))
-            .limit(k))
+            .orderBy(F.desc("bm25"), F.asc("doc_id"))
+            .limit(BM25_TOP_K))
 
 
 CURATION_STAGES = ("ingest", "lang_id", "quality", "repetition",
                    "exact_dedup", "neardup", "decontaminate", "sample")
 
 
-def curation_funnel(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text", strata_col: str = "lang",
-                    bench_mod: int = DECONTAM_BENCH_MOD) -> DataFrame:
+def curation_funnel(docs: DataFrame) -> DataFrame:
     """End-to-end training-data curation funnel — the composition a
     real 100 TB run chains: hold out the benchmark slice, then
     language-ID filter -> quality filter -> repetition filter ->
@@ -937,12 +924,12 @@ def curation_funnel(docs: DataFrame, id_col: str = "doc_id",
       loop, one DataFrame out."""
     from pyspark.sql import Window
 
-    bench = docs.where(F.col(id_col) % bench_mod == 0)
-    corpus = docs.where(F.col(id_col) % bench_mod != 0)
+    bench = docs.where(F.col("doc_id") % DECONTAM_BENCH_MOD == 0)
+    corpus = docs.where(F.col("doc_id") % DECONTAM_BENCH_MOD != 0)
     # the per-doc map stages: keep_quality is text_quality's
     # bucket-'low' rule negated; keep_rep negates repetition_signals'
     # flag via the shared _rep_* fraction expressions
-    t = F.col(text_col)
+    t = F.col("text")
     keep_lang = None
     for _, score in lang_scores(t):
         cond = score > 0
@@ -973,18 +960,15 @@ def curation_funnel(docs: DataFrame, id_col: str = "doc_id",
 
     s3 = materialize_once(
         corpus.where(keep_lang & keep_quality & keep_rep))
-    w = Window.partitionBy(F.md5(F.col(text_col)))
+    w = Window.partitionBy(F.md5(t))
     s4 = materialize_once(
-        s3.withColumn("_min_id", F.min(id_col).over(w))
-        .where(F.col(id_col) == F.col("_min_id")).drop("_min_id"))
-    s5 = materialize_once(
-        neardup_representatives(s4, id_col=id_col, text_col=text_col))
-    contam = contaminated_ids(s5, bench, id_col=id_col,
-                              text_col=text_col)
+        s3.withColumn("_min_id", F.min("doc_id").over(w))
+        .where(F.col("doc_id") == F.col("_min_id")).drop("_min_id"))
+    s5 = materialize_once(neardup_representatives(s4))
+    contam = contaminated_ids(s5, bench)
     s6 = materialize_once(
-        s5.join(F.broadcast(contam), id_col, "left_anti"))
-    s7 = stratified_hash_sample(s6, key_col=id_col,
-                                strata_col=strata_col)
+        s5.join(F.broadcast(contam), "doc_id", "left_anti"))
+    s7 = stratified_hash_sample(s6)
 
     def stage_row(idx, name, frame):
         return frame.agg(F.count("*").alias("n_docs")).select(
@@ -1023,12 +1007,11 @@ PII_PATTERNS = (
 PII_PLANT_DOMAIN = "mail.example.com"
 
 
-def plant_pii(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def plant_pii(docs: DataFrame) -> DataFrame:
     """Append deterministic synthetic PII to each document (demo input
     for :func:`pii_scrub`; the DuckDB oracle rebuilds the identical
     augmentation from ``doc_id``).  Pure projection."""
-    did = F.col(id_col)
+    did = F.col("doc_id")
     ds = did.cast("string")
     email = F.concat(F.lit(" Contact user"), ds,
                      F.lit("@" + PII_PLANT_DOMAIN))
@@ -1040,11 +1023,10 @@ def plant_pii(docs: DataFrame, id_col: str = "doc_id",
         (did % 101).cast("string"), F.lit("."),
         (1 + did % 254).cast("string"))).otherwise("")
     return docs.withColumn(
-        text_col, F.concat(F.col(text_col), email, phone, ip))
+        "text", F.concat(F.col("text"), email, phone, ip))
 
 
-def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """PII detection + redaction — the scrubbing pass every
     training-data pipeline runs before a corpus ships.  Per document:
     the count of each :data:`PII_PATTERNS` kind found in the ORIGINAL
@@ -1057,12 +1039,12 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
     the original text so kinds are independent of redaction order;
     redaction chains in PII_PATTERNS order so nested spans (an IP-like
     dotted domain inside an email) are consumed exactly once."""
-    counts = [F.regexp_count(F.col(text_col), F.lit(pat)).cast("long")
+    counts = [F.regexp_count(F.col("text"), F.lit(pat)).cast("long")
               .alias(f"n_{kind}") for kind, pat, _ in PII_PATTERNS]
-    clean = F.col(text_col)
+    clean = F.col("text")
     for _, pat, repl in PII_PATTERNS:
         clean = F.regexp_replace(clean, pat, repl)
-    return docs.select(id_col, *counts, clean.alias("clean_text"))
+    return docs.select("doc_id", *counts, clean.alias("clean_text"))
 
 
 # --- training-mixture weights -------------------------------------------
@@ -1070,16 +1052,15 @@ def pii_scrub(docs: DataFrame, id_col: str = "doc_id",
 MIXTURE_MAX_WEIGHT = 5.0  # never upsample a stratum more than 5x
 
 
-def mixture_weights(docs: DataFrame, strata_col: str = "lang",
-                    text_col: str = "text",
-                    max_weight: float = MIXTURE_MAX_WEIGHT) -> DataFrame:
+def mixture_weights(docs: DataFrame) -> DataFrame:
     """Per-stratum sampling weights that move the corpus toward a
     UNIFORM target mixture by token mass — the domain/language
     re-weighting step of a training-data pipeline (the DoReMi/Pile
     style mixture table, with the standard max-repetition cap so rare
     strata aren't epoch-ed into memorization).
 
-    ``mix_weight = min(target_share / natural_share, max_weight)``
+    ``mix_weight = min(target_share / natural_share,
+    MIXTURE_MAX_WEIGHT)``
     where ``natural_share = stratum_tokens / total_tokens`` and the
     uniform target is ``1 / n_strata``.  Shares and weights are
     ROUNDED to 6 places with the identical expression tree in the
@@ -1089,20 +1070,21 @@ def mixture_weights(docs: DataFrame, strata_col: str = "lang",
     map-side-combining groupBy on the stratum (output rows == number
     of strata, i.e. tiny); the grand total is a 1-row aggregate
     broadcast back.  No per-document shuffle, one corpus scan."""
-    per = docs.groupBy(strata_col).agg(
+    per = docs.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.size(F.split(F.col(text_col), " ")).cast("long"))
+        F.sum(F.size(F.split(F.col("text"), " ")).cast("long"))
         .alias("n_tokens"))
     tot = per.agg(F.sum("n_tokens").alias("_tot"),
                   F.count("*").alias("_k"))
     natural = F.col("n_tokens").cast("double") / F.col("_tot")
     target = F.lit(1.0) / F.col("_k")
     return (per.crossJoin(F.broadcast(tot))
-            .select(strata_col, "n_docs", "n_tokens",
+            .select("lang", "n_docs", "n_tokens",
                     F.round(natural, 6).alias("natural_share"),
-                    F.round(F.least(F.lit(max_weight), target / natural),
+                    F.round(F.least(F.lit(MIXTURE_MAX_WEIGHT),
+                                    target / natural),
                             6).alias("mix_weight"))
-            .orderBy(strata_col))
+            .orderBy("lang"))
 
 
 # --- token-budget shard packing (distributed prefix sum) -----------------
@@ -1113,11 +1095,9 @@ PACK_RANGE_DOCS = 128      # id-range compression width for the scan
 
 def pack_training_shards(docs: DataFrame,
                          budget: int = SHARD_TOKEN_BUDGET,
-                         id_col: str = "doc_id",
-                         text_col: str = "text",
                          range_docs: int = PACK_RANGE_DOCS) -> DataFrame:
     """Assign documents to fixed-token-budget training shards in
-    stable ``id_col`` order: ``shard_id = floor(exclusive_prefix_sum /
+    stable ``doc_id`` order: ``shard_id = floor(exclusive_prefix_sum /
     budget)`` — the sequence-packing plan a dataloader consumes.
 
     A global cumulative sum is a single-task window in the naive
@@ -1140,10 +1120,10 @@ def pack_training_shards(docs: DataFrame,
     start), which is the standard greedy packing rule."""
     from pyspark.sql import Window
     toks = docs.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), " ")).cast("long")
+        F.col("doc_id"),
+        F.size(F.split(F.col("text"), " ")).cast("long")
         .alias("n_tokens"),
-        F.floor(F.col(id_col) / range_docs).alias("_rng"))
+        F.floor(F.col("doc_id") / range_docs).alias("_rng"))
     rng_sums = toks.groupBy("_rng").agg(F.sum("n_tokens").alias("_rs"))
     w_rng = (Window.orderBy("_rng")
              .rowsBetween(Window.unboundedPreceding, -1))
@@ -1151,12 +1131,12 @@ def pack_training_shards(docs: DataFrame,
         "_rng",
         F.coalesce(F.sum("_rs").over(w_rng), F.lit(0).cast("long"))
         .alias("_off"))
-    w_in = Window.partitionBy("_rng").orderBy(id_col)
+    w_in = Window.partitionBy("_rng").orderBy("doc_id")
     return (toks.join(F.broadcast(offsets), "_rng")
-            .select(id_col, "n_tokens",
+            .select("doc_id", "n_tokens",
                     (F.col("_off") + F.sum("n_tokens").over(w_in))
                     .alias("cum_tokens"))
-            .select(id_col, "n_tokens", "cum_tokens",
+            .select("doc_id", "n_tokens", "cum_tokens",
                     F.floor((F.col("cum_tokens") - F.col("n_tokens"))
                             / budget).cast("bigint").alias("shard_id")))
 
@@ -1175,25 +1155,22 @@ BOILERPLATE_PLANT = (
 LINE_DUP_MIN = 3   # corpus occurrences at which a line is boilerplate
 
 
-def plant_boilerplate(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def plant_boilerplate(docs: DataFrame) -> DataFrame:
     """Append deterministic boilerplate lines to each document (demo
     input for :func:`line_dedup`; the DuckDB oracle rebuilds the
     identical augmentation from ``doc_id`` — no RNG, replayable).
     Pure projection; NULL text stays NULL (concat propagates)."""
-    out = F.col(text_col)
+    out = F.col("text")
     for mod, line in BOILERPLATE_PLANT:
-        out = F.when(F.col(id_col) % mod == 0,
+        out = F.when(F.col("doc_id") % mod == 0,
                      F.concat(out, F.lit("\n" + line))).otherwise(out)
-    return docs.withColumn(text_col, out)
+    return docs.withColumn("text", out)
 
 
-def line_dedup(docs: DataFrame, id_col: str = "doc_id",
-               text_col: str = "text",
-               min_count: int = LINE_DUP_MIN) -> DataFrame:
+def line_dedup(docs: DataFrame) -> DataFrame:
     """Corpus-level line deduplication — the C4 boilerplate rule
     (Raffel et al. 2020, §2.2 of the C4 construction): a line whose
-    trimmed form occurs ``min_count``+ times ACROSS THE CORPUS is
+    trimmed form occurs ``LINE_DUP_MIN``+ times ACROSS THE CORPUS is
     boilerplate (nav bars, cookie banners, license footers); drop
     every occurrence except the first (minimum ``(doc_id, line_no)``),
     and reassemble each document from its surviving lines in order.
@@ -1213,26 +1190,27 @@ def line_dedup(docs: DataFrame, id_col: str = "doc_id",
     equi-join AQE can skew-split; reassembly is one groupBy on the
     doc id with per-doc-bounded state (sort_array over the doc's own
     lines)."""
-    lines = (docs.where(F.col(text_col).isNotNull())
-             .select(id_col, F.posexplode(F.split(F.col(text_col), "\n"))
+    lines = (docs.where(F.col("text").isNotNull())
+             .select("doc_id", F.posexplode(F.split(F.col("text"), "\n"))
                      .alias("_ln", "_line")))
     # BOTH the frequency agg and the join-back read the exploded
     # frame — materialize it once (the cap_blocks discipline) so
     # the corpus split/explode doesn't run twice
     keyed = materialize_once(lines.select(
-        id_col, "_ln", "_line", F.md5(F.trim(F.col("_line"))).alias("_k")))
+        "doc_id", "_ln", "_line",
+        F.md5(F.trim(F.col("_line"))).alias("_k")))
     sizes = (keyed.where(F.length(F.trim(F.col("_line"))) > 0)
              .groupBy("_k")
              .agg(F.count("*").alias("_c"),
-                  F.min(F.struct(F.col(id_col).alias("d"),
+                  F.min(F.struct(F.col("doc_id").alias("d"),
                                  F.col("_ln").alias("l"))).alias("_first")))
     ann = keyed.join(sizes, "_k", "left")
     keep = (F.col("_c").isNull()
-            | (F.col("_c") < min_count)
-            | ((F.col("_first.d") == F.col(id_col))
+            | (F.col("_c") < LINE_DUP_MIN)
+            | ((F.col("_first.d") == F.col("doc_id"))
                & (F.col("_first.l") == F.col("_ln"))))
-    per = (ann.select(id_col, "_ln", "_line", keep.alias("_keep"))
-           .groupBy(id_col)
+    per = (ann.select("doc_id", "_ln", "_line", keep.alias("_keep"))
+           .groupBy("doc_id")
            .agg(F.count("*").alias("n_lines"),
                 F.sum(F.col("_keep").cast("long")).alias("n_kept"),
                 F.array_join(
@@ -1243,8 +1221,8 @@ def line_dedup(docs: DataFrame, id_col: str = "doc_id",
                             lambda s: s["_keep"]),
                         lambda s: s["_line"]),
                     "\n").alias("clean_text")))
-    return (docs.select(id_col).join(per, id_col, "left")
-            .select(id_col, "n_lines", "n_kept", "clean_text"))
+    return (docs.select("doc_id").join(per, "doc_id", "left")
+            .select("doc_id", "n_lines", "n_kept", "clean_text"))
 
 
 # --- cross-document duplicate span detection (Lee et al. style) ----------
@@ -1252,15 +1230,13 @@ def line_dedup(docs: DataFrame, id_col: str = "doc_id",
 DUPSPAN_NGRAM = 8  # window width in words, matches decontamination's
 
 
-def duplicate_span_stats(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text",
-                         n: int = DUPSPAN_NGRAM) -> DataFrame:
+def duplicate_span_stats(docs: DataFrame) -> DataFrame:
     """Substring-level duplication signals — the cross-document
     counterpart of :func:`repetition_signals` (which is within-doc)
     and the detection half of exact-substring training-data dedup
     (Lee et al. 2022, "Deduplicating Training Data Makes Language
-    Models Better"): per document, how many of its DISTINCT n-word
-    spans also appear in at least one OTHER document's text, and the
+    Models Better"): per document, how many of its DISTINCT
+    ``DUPSPAN_NGRAM``-word spans also appear in at least one OTHER document's text, and the
     duplicated fraction.
 
     Output: ``n_spans`` (distinct n-gram windows), ``n_dup_spans``
@@ -1279,19 +1255,20 @@ def duplicate_span_stats(docs: DataFrame, id_col: str = "doc_id",
     # frame is far cheaper than running the shingle construction
     # twice (the frequency agg AND the join-back both read it)
     hashed = materialize_once(
-        docs.where(F.col(text_col).isNotNull())
-        .select(id_col,
+        docs.where(F.col("text").isNotNull())
+        .select("doc_id",
                 F.explode(F.array_distinct(
-                    word_shingles(F.col(text_col), n))).alias("_sh"))
-        .select(id_col, F.md5(F.col("_sh")).alias("_h")))
+                    word_shingles(F.col("text"), DUPSPAN_NGRAM)))
+                .alias("_sh"))
+        .select("doc_id", F.md5(F.col("_sh")).alias("_h")))
     sizes = hashed.groupBy("_h").agg(F.count("*").alias("_docs"))
     per = (hashed.join(sizes, "_h")
-           .groupBy(id_col)
+           .groupBy("doc_id")
            .agg(F.count("*").alias("n_spans"),
                 F.sum((F.col("_docs") >= 2).cast("long"))
                 .alias("n_dup_spans")))
-    return (docs.select(id_col).join(per, id_col, "left")
-            .select(id_col, "n_spans", "n_dup_spans",
+    return (docs.select("doc_id").join(per, "doc_id", "left")
+            .select("doc_id", "n_spans", "n_dup_spans",
                     F.round(F.col("n_dup_spans") / F.col("n_spans"), 6)
                     .alias("dup_span_frac")))
 
@@ -1302,12 +1279,9 @@ SPLIT_FRACTIONS = (("test", 0.1), ("val", 0.1))  # remainder = train
 SPLIT_PAD_W = 12   # lpad width: lexicographic order == numeric id order
 
 
-def leakage_safe_split(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       fractions=SPLIT_FRACTIONS,
+def leakage_safe_split(docs: DataFrame,
                        max_bucket: int = DEFAULT_MAX_BAND_BUCKET,
                        cc_local_threshold: int = 1_000_000,
-                       cc_max_iter: int = 15,
                        metrics_out: dict | None = None) -> DataFrame:
     """Deterministic train/val/test assignment in which a near-dup
     CLUSTER never straddles a split — the leakage guarantee a plain
@@ -1340,8 +1314,8 @@ def leakage_safe_split(docs: DataFrame, id_col: str = "doc_id",
       real funnel exact dedup (q30 stage 4) removes such
       byte-identical shapes before splitting.
     - the distributed min-label CC converges in O(graph diameter)
-      rounds; a >``cc_max_iter``-diameter drift chain on that path
-      warns and may split a component — raise ``cc_max_iter``, or keep
+      rounds; a drift chain longer than connected_components'
+      ``max_iter`` on that path warns and may split a component — keep
       the pair set under ``cc_local_threshold`` so the driver-side
       union-find (diameter-independent) resolves it."""
     from ollie_spark.spark.linking import connected_components
@@ -1349,14 +1323,13 @@ def leakage_safe_split(docs: DataFrame, id_col: str = "doc_id",
     def pad(c):
         return F.lpad(c.cast("string"), SPLIT_PAD_W, "0")
 
-    pairs = minhash_band_pairs(docs, id_col=id_col, text_col=text_col,
-                               max_bucket=max_bucket,
+    pairs = minhash_band_pairs(docs, max_bucket=max_bucket,
                                metrics_out=metrics_out)
     cc = connected_components(
         pairs.select(pad(F.col("doc_a")).alias("norm_a"),
                      pad(F.col("doc_b")).alias("norm_b")),
-        docs.select(pad(F.col(id_col)).alias("norm")),
-        local_threshold=cc_local_threshold, max_iter=cc_max_iter)
+        docs.select(pad(F.col("doc_id")).alias("norm")),
+        local_threshold=cc_local_threshold)
     # two-step projection: the hash lands as an aliased column and the
     # CASE chain references it as a column ref — inlining it would
     # re-evaluate the md5 once per WHEN branch (the q23 trap)
@@ -1365,12 +1338,12 @@ def leakage_safe_split(docs: DataFrame, id_col: str = "doc_id",
                     .alias("_h"))
     h = F.col("_h")
     cum, split = 0.0, None
-    for name, frac in fractions:
+    for name, frac in SPLIT_FRACTIONS:
         cum += frac
         cut = F.lit(rate_to_hex_threshold(cum))
         split = (F.when(h < cut, name) if split is None
                  else split.when(h < cut, name))
     return ann.select(
-        F.col("norm").cast("bigint").alias(id_col),
+        F.col("norm").cast("bigint").alias("doc_id"),
         F.col("component").cast("bigint").alias("rep_id"),
         split.otherwise("train").alias("split"))

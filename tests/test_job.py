@@ -86,3 +86,22 @@ def test_build_graph_degenerate_input_writes_typed_empty_stages(
 
     again = build_graph(spark, docs, root, n_buckets=4)
     assert all(again[s]["buckets"] == [] for s in again)
+
+
+def test_stage_writer_leaves_session_overwrite_mode_alone(spark, tmp_path):
+    """StageWriter, run_stage and read_graph must not change the
+    session's partitionOverwriteMode (the caller's later overwrites
+    would silently turn dynamic); the bucket write is dynamic on its
+    own, so rewriting one bucket keeps the others."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    root = str(tmp_path / "graph")
+    df = spark.range(40).select(F.col("id").cast("string").alias("doc_id"))
+    w = StageWriter(spark, root, n_buckets=4)
+    for stage in ("mentions", "nodes", "edges", "nary"):
+        w.run_stage(stage, df)
+    w.run_stage("mentions", df, buckets=[0])
+    assert w.read_stage("mentions").count() == 40
+    g = read_graph(spark, root)
+    assert g["nary"].count() == 40
+    assert spark.conf.get(key) == "STATIC"
