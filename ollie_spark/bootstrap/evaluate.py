@@ -15,6 +15,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# B21: sentences drawn per bootstrap resample
+# (StatisticalSignificance.scala:52-127)
+BOOTSTRAP_SAMPLE_SIZE = 50
+
 
 def triple_key(df: DataFrame) -> DataFrame:
     return df.withColumn(
@@ -60,9 +64,7 @@ def rank_patterns(scored: DataFrame) -> DataFrame:
 
 def paired_bootstrap_significance(scored_a: DataFrame,
                                   scored_b: DataFrame,
-                                  iterations: int = 100,
-                                  sample_size: int = 50,
-                                  seed: int = 42) -> float:
+                                  iterations: int = 100) -> float:
     """B21 (eval/StatisticalSignificance.scala:52-127): paired bootstrap
     over sentence resamples — p = fraction of resamples where system A's
     precision does not beat B's.
@@ -90,9 +92,9 @@ def paired_bootstrap_significance(scored_a: DataFrame,
     spark = scored_a.sparkSession
     grid = (spark.range(iterations).withColumnRenamed("id", "iter")
             .withColumn("draw", F.explode(F.sequence(
-                F.lit(0), F.lit(sample_size - 1))))
+                F.lit(0), F.lit(BOOTSTRAP_SAMPLE_SIZE - 1))))
             .withColumn("sid", F.pmod(
-                F.xxhash64("iter", "draw", F.lit(seed)),
+                F.xxhash64("iter", "draw", F.lit(42)),
                 F.lit(n_sent)).cast("int")))
     sampled = grid.join(joined, "sid")
     per_iter = (sampled.groupBy("iter")

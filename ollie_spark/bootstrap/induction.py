@@ -267,8 +267,7 @@ def find_relation_patterns(graph: DependencyGraph, rel: str, arg1: str,
 
 
 def induce_from_seed(rel: str, arg1: str, arg2: str, lemmas: set,
-                     pickled: str, max_length: int | None = None,
-                     require_valid: bool = True):
+                     pickled: str, max_length: int | None = None):
     """Full B4 per-seed step: deserialize, lemmatize, normalize, induce,
     validate."""
     graph = DependencyGraph.deserialize(pickled).normalize(
@@ -277,6 +276,4 @@ def induce_from_seed(rel: str, arg1: str, arg2: str, lemmas: set,
         return []
     patterns = find_relation_patterns(graph, rel, arg1, arg2, lemmas,
                                       max_length)
-    if require_valid:
-        patterns = [(p, s) for p, s in patterns if pattern_is_valid(p)]
-    return patterns
+    return [(p, s) for p, s in patterns if pattern_is_valid(p)]

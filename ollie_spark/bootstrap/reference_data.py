@@ -36,15 +36,12 @@ def _part(serialized: str) -> Part:
     return Part(tuple(nodes), text)
 
 
-def load_training_instances(path: str | None = None,
-                            limit: int | None = None):
+def load_training_instances(path: str | None = None):
     """-> list[LabelledInstance]; malformed rows are skipped (counted
     in the second return value)."""
     p = Path(path or DEFAULT_PATH)
     instances, errors = [], 0
     for line in p.read_text().splitlines():
-        if limit is not None and len(instances) >= limit:
-            break
         cols = line.split("\t")
         if len(cols) != 13:
             errors += 1

@@ -55,9 +55,7 @@ def find_target_arguments(args_df: DataFrame,
 
 
 def find_target_extractions(extractions: DataFrame,
-                            frequent_args: DataFrame,
-                            target_relations: DataFrame | None = None
-                            ) -> DataFrame:
+                            frequent_args: DataFrame) -> DataFrame:
     """B2 (FindTargetExtractions.scala:66-132).
 
     extractions(rel_lemma, arg1_lemma, arg2_lemma, arg1_postag,
@@ -71,10 +69,6 @@ def find_target_extractions(extractions: DataFrame,
         & ~F.arrays_overlap(
             F.split(F.col("rel_lemma"), " "),
             F.array(*[F.lit(x) for x in NEGATION_LEMMAS])))
-    if target_relations is not None:
-        e = e.join(F.broadcast(target_relations
-                               .select(F.col("rel_lemma"))), "rel_lemma",
-                   "left_semi")
     fa = F.broadcast(frequent_args.select(
         F.col("arg_lemma")))
     e = (e.join(fa.withColumnRenamed("arg_lemma", "arg1_lemma"),

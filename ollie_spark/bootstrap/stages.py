@@ -28,6 +28,13 @@ from pyspark.sql.types import (ArrayType, StringType, StructField,
 
 from ..model.wordlists import SIMPLE_PREPOSITIONS
 
+# B11: a (template, pattern) pair is kept when seen at least this
+# often (BuildTemplates.scala:431-455)
+MIN_TEMPLATE_COUNT = 1
+# B12: a rel matcher widens to a category when at least MIN_OVERLAP of
+# its >= MIN_LEMMAS lemmas fall in it (GeneralizeTemplate.scala:73-131)
+MIN_OVERLAP = 0.75
+MIN_LEMMAS = 10
 SEED_SCHEMA = ("rel string, arg1 string, arg2 string, lemmas string, "
                "pickled string")
 
@@ -155,15 +162,14 @@ def generalize_prepositions(histogram: DataFrame) -> DataFrame:
             .agg(F.sum("count").alias("count")))
 
 
-def build_templates(histogram: DataFrame,
-                    min_count: int = 1) -> DataFrame:
+def build_templates(histogram: DataFrame) -> DataFrame:
     """B9+B11: (template, pattern, count) with single-{rel} cleanup
     (BuildTemplates.scala:431-455)."""
     t = histogram.withColumn("template",
                              generalize_relation_expr(F.col("rel")))
     agg = (t.groupBy("template", "pattern")
            .agg(F.sum("count").alias("count"))
-           .where(F.col("count") >= min_count))
+           .where(F.col("count") >= MIN_TEMPLATE_COUNT))
     # drop templates with more than one {rel}
     n_rel = F.size(F.split(F.col("template"), r"\{rel}")) - 1
     return agg.where(n_rel == 1)
@@ -224,13 +230,11 @@ def load_categories(base_dir: str | None = None) -> dict:
     return out
 
 
-def generalize_templates(model: DataFrame, categories: dict,
-                         min_overlap: float = 0.75,
-                         min_lemmas: int = 10) -> DataFrame:
+def generalize_templates(model: DataFrame, categories: dict) -> DataFrame:
     """B12 (template/GeneralizeTemplate.scala:73-131): widen a rel
-    matcher's lexical regex to a whole category when >= min_overlap of
+    matcher's lexical regex to a whole category when >= MIN_OVERLAP of
     its lemmas fall in that category (NN/NNS matchers with >=
-    min_lemmas lemmas)."""
+    MIN_LEMMAS lemmas)."""
     if not categories:
         return model
     rel_regex = F.regexp_extract(
@@ -246,8 +250,8 @@ def generalize_templates(model: DataFrame, categories: dict,
             "pattern", r"(\{rel:postag=NNS?:regex=)[^}]*(\})",
             "$1" + "|".join(words) + "$2")
         expr = F.when(
-            (F.size("_lemmas") >= min_lemmas)
-            & (overlap >= min_overlap), widened).otherwise(expr)
+            (F.size("_lemmas") >= MIN_LEMMAS)
+            & (overlap >= MIN_OVERLAP), widened).otherwise(expr)
     return out.withColumn("pattern", expr).drop("_lemmas")
 
 
@@ -336,7 +340,6 @@ def counts_to_confidence(templates: DataFrame) -> DataFrame:
 
 def train_model(seeds: DataFrame, max_length: int | None = 4,
                 min_common: int = 1, min_diverse: int = 1,
-                min_template_count: int = 1,
                 with_reflections: bool = False,
                 slot_min_count: int | None = None) -> DataFrame:
     """The full chain: seeds -> model(template, pattern, conf)."""
@@ -346,7 +349,7 @@ def train_model(seeds: DataFrame, max_length: int | None = 4,
     if slot_min_count is not None:
         diverse = slot_semantics(diverse, slot_min_count)
     hist = generalize_prepositions(template_histogram(diverse))
-    templates = build_templates(hist, min_template_count)
+    templates = build_templates(hist)
     if with_reflections:
         templates = passive_reflections(templates)
     return counts_to_confidence(templates)

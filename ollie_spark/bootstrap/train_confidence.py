@@ -23,34 +23,33 @@ def _assemble(labelled: DataFrame):
         array_to_vector(F.col("features")).alias("fvec"))
 
 
-def train_confidence(labelled: DataFrame, feature_order: list[str],
-                     reg_param: float = 0.0) -> tuple[float, dict]:
+def _logistic_regression():
+    """The model both trainers fit: unregularized (Spark's default
+    regParam 0.0), at most 100 iterations."""
+    from pyspark.ml.classification import LogisticRegression
+    return LogisticRegression(featuresCol="fvec", labelCol="label",
+                              maxIter=100)
+
+
+def train_confidence(labelled: DataFrame, feature_order: list[str]
+                     ) -> tuple[float, dict]:
     """labelled(features array<double>, label int) ->
     (intercept, {feature: weight})."""
-    from pyspark.ml.classification import LogisticRegression
-
-    lr = LogisticRegression(featuresCol="fvec", labelCol="label",
-                            regParam=reg_param, maxIter=100)
-    model = lr.fit(_assemble(labelled))
+    model = _logistic_regression().fit(_assemble(labelled))
     coeffs = model.coefficients.toArray().tolist()
     return float(model.intercept), dict(zip(feature_order, coeffs))
 
 
-def cross_validate_confidence(labelled: DataFrame, folds: int = 10,
-                              seed: int = 42) -> float:
+def cross_validate_confidence(labelled: DataFrame, folds: int = 10) -> float:
     """B16: k-fold CV accuracy (reference default splits=10)."""
-    from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.evaluation import (
         MulticlassClassificationEvaluator)
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    data = _assemble(labelled)
-    lr = LogisticRegression(featuresCol="fvec", labelCol="label",
-                            maxIter=100)
     cv = CrossValidator(
-        estimator=lr,
+        estimator=_logistic_regression(),
         estimatorParamMaps=ParamGridBuilder().build(),
         evaluator=MulticlassClassificationEvaluator(
             labelCol="label", metricName="accuracy"),
-        numFolds=folds, seed=seed)
-    return float(max(cv.fit(data).avgMetrics))
+        numFolds=folds, seed=42)
+    return float(max(cv.fit(_assemble(labelled)).avgMetrics))

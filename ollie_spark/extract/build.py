@@ -13,7 +13,7 @@ import re
 from dataclasses import dataclass, field, replace
 from functools import cached_property
 
-from ..graph import DependencyGraph, Node, intersects, span_of
+from ..graph import DependencyGraph, intersects, span_of
 from ..model.lemmatizer import lemmatize
 from ..model.patterns import Match, Pattern, match_pattern
 from ..model.wordlists import (COGNITIVE_WORDS, COMMUNICATION_WORDS,
@@ -33,9 +33,9 @@ class Part:
     text: str
 
     @classmethod
-    def of(cls, nodes, text=None):
+    def of(cls, nodes):
         ns = tuple(_sorted_nodes(nodes))
-        return cls(ns, nodes_text(ns) if text is None else text)
+        return cls(ns, nodes_text(ns))
 
     @property
     def span(self):
@@ -99,16 +99,14 @@ class DetailedExtraction:
 ATTRIBUTION_PATTERN = Pattern.deserialize("{old} <ccomp< {rel} >nsubj> {arg}")
 
 
-def valid_match(m: Match, restrict_arguments: bool = True) -> bool:
+def valid_match(m: Match) -> bool:
     """R9 (OpenParse.scala:188-190)."""
-    if not restrict_arguments:
-        return True
     return (m.node_groups["arg1"].postag in VALID_ARG_POSTAG
             and m.node_groups["arg2"].postag in VALID_ARG_POSTAG)
 
 
-def from_match(graph: DependencyGraph, m: Match, pattern: Pattern,
-               expand: bool = True) -> list[DetailedExtraction]:
+def from_match(graph: DependencyGraph, m: Match,
+               pattern: Pattern) -> list[DetailedExtraction]:
     """R10-R12 (Extraction.scala:146-212)."""
     groups = m.node_groups
     rels = [groups[k] for k in sorted(groups) if k.startswith("rel")]
@@ -117,31 +115,28 @@ def from_match(graph: DependencyGraph, m: Match, pattern: Pattern,
     arg1, arg2 = groups["arg1"], groups["arg2"]
 
     rel_set = set(rels)
-    e_arg1 = expand_argument(graph, arg1, rel_set) if expand else [arg1]
-    e_arg2 = expand_argument(graph, arg2, rel_set) if expand else [arg2]
+    e_arg1 = expand_argument(graph, arg1, rel_set)
+    e_arg2 = expand_argument(graph, arg2, rel_set)
 
     # exclude rel-rel extractions whose secondary rel has its own nsubj
     if any(e.label == "nsubj" for rel in rels[1:]
            for e in graph.out_edges(rel)):
-        rel_parts = []
-    elif expand:
-        until = set(e_arg1) | set(e_arg2)
-        per_rel = [expand_relation(graph, rel, until) for rel in rels]
-        # cartesian product across rels (scalaz `sequence`)
-        combos = [[]]
-        for options in per_rel:
-            combos = [c + [o] for c in combos for o in options]
-        rel_parts = []
-        for combo in combos:
-            pool = {}
-            for ns, _ in combo:
-                pool.update({n.sort_key: n for n in ns})
-            text = " ".join(t for _, t in combo)
-            rel_parts.append(Part(tuple(_sorted_nodes(pool.values())), text))
-        # de-dup identical parts (Set semantics in the reference)
-        rel_parts = list(dict.fromkeys(rel_parts))
-    else:
-        rel_parts = [Part.of(rels)]
+        return []
+    until = set(e_arg1) | set(e_arg2)
+    per_rel = [expand_relation(graph, rel, until) for rel in rels]
+    # cartesian product across rels (scalaz `sequence`)
+    combos = [[]]
+    for options in per_rel:
+        combos = [c + [o] for c in combos for o in options]
+    rel_parts = []
+    for combo in combos:
+        pool = {}
+        for ns, _ in combo:
+            pool.update({n.sort_key: n for n in ns})
+        text = " ".join(t for _, t in combo)
+        rel_parts.append(Part(tuple(_sorted_nodes(pool.values())), text))
+    # de-dup identical parts (Set semantics in the reference)
+    rel_parts = list(dict.fromkeys(rel_parts))
 
     # loop-invariant hoists: the arg spans (and so the overlap veto)
     # and the advcl modifier don't depend on the rel_part combo — the
@@ -299,13 +294,12 @@ class Extractor:
         trailing = mre.group(0) if mre else None
         return trailing == self.pattern.last_prep
 
-    def extract(self, graph: DependencyGraph, expand=True,
-                restrict_arguments=True) -> list[DetailedExtraction]:
+    def extract(self, graph: DependencyGraph) -> list[DetailedExtraction]:
         out = []
         for m in match_pattern(self.pattern, graph):
-            if not valid_match(m, restrict_arguments):
+            if not valid_match(m):
                 continue
-            for extr in from_match(graph, m, self.pattern, expand=expand):
+            for extr in from_match(graph, m, self.pattern):
                 if self.template is not None:
                     extr = self.template.apply(extr, graph, m)
                 out.append(extr)
@@ -321,41 +315,27 @@ class Extractor:
 
 # ------------------------------------------------------ per-sentence engine
 
-@dataclass(frozen=True)
-class OpenParseConfig:
-    """OpenParse.Configuration (OpenParse.scala:289-296)."""
-
-    simplify_vb_postags: bool = False
-    simplify_postags: bool = True
-    confidence_threshold: float = 0.0
-    expand_extraction: bool = True
-    restrict_arguments: bool = True
-    keep_duplicates: bool = False
-    collapse_graph: bool = True
+def simplify_graph(graph: DependencyGraph) -> DependencyGraph:
+    """R5 at OpenParse's defaults (OpenParse.scala:38-54, 289-296):
+    collapse, then simplify postags.  The reference's default-off
+    ``simplifyVBPostags`` is not carried."""
+    return graph.collapse().simplify_postags()
 
 
 class OpenParse:
     """The per-sentence extractor over a loaded pattern model
-    (OpenParse.scala:59-127)."""
+    (OpenParse.scala:59-127).  Every other OpenParse.Configuration
+    switch runs at its default: matches are expanded, arguments
+    restricted to VALID_ARG_POSTAG, and duplicates removed."""
 
-    def __init__(self, extractors, config: OpenParseConfig | None = None):
-        self.config = config or OpenParseConfig()
+    def __init__(self, extractors, confidence_threshold: float = 0.0):
         # R6: drop extractors that can never clear the threshold
         self.extractors = [e for e in extractors
-                           if e.conf >= self.config.confidence_threshold]
-
-    def simplify_graph(self, graph: DependencyGraph) -> DependencyGraph:
-        if self.config.collapse_graph:
-            graph = graph.collapse()
-        if self.config.simplify_postags:
-            graph = graph.simplify_postags()
-        if self.config.simplify_vb_postags:
-            graph = graph.simplify_vb_postags()
-        return graph
+                           if e.conf >= confidence_threshold]
 
     def extract(self, graph: DependencyGraph):
-        """-> list[(conf, DetailedExtraction)], best first."""
-        graph = self.simplify_graph(graph)
+        """-> list[(conf, DetailedExtraction, Extractor)], best first."""
+        graph = simplify_graph(graph)
         labels = graph.edge_labels
         has_prep = any(l.startswith("prep") for l in labels)
         postags = frozenset(n.postag for n in graph.nodes)
@@ -371,35 +351,29 @@ class OpenParse:
                 continue
             if not ex.pattern.required_postags <= postags:
                 continue
-            for extr in ex.extract(
-                    graph, expand=self.config.expand_extraction,
-                    restrict_arguments=self.config.restrict_arguments):
-                if ex.conf >= self.config.confidence_threshold:
-                    results.append((ex.conf, extr, ex))
+            for extr in ex.extract(graph):
+                results.append((ex.conf, extr, ex))
 
-        if not self.config.keep_duplicates:
-            # exact-duplicate removal on (conf, texts)
-            seen, uniq = set(), []
-            for conf, extr, ex in results:
-                key = (conf, extr.arg1.text, extr.rel.text, extr.arg2.text)
-                if key not in seen:
-                    seen.add(key)
-                    uniq.append((conf, extr, ex))
-            # subsumption: drop when a same-rel, higher-conf extraction
-            # contains this one's arg1 or arg2 (OpenParse.scala:110-121)
-            reduced = []
-            for conf, extr, ex in uniq:
-                dominated = any(
-                    o_extr.rel == extr.rel and conf < o_conf
-                    and (extr.arg1.text in o_extr.arg1.text
-                         or extr.arg2.text in o_extr.arg2.text)
-                    for o_conf, o_extr, _ in uniq)
-                if not dominated:
-                    reduced.append((conf, extr, ex))
-            results = reduced
-
-        results.sort(key=lambda t: (-t[0], str(t[1])))
-        return results
+        # exact-duplicate removal on (conf, texts)
+        seen, uniq = set(), []
+        for conf, extr, ex in results:
+            key = (conf, extr.arg1.text, extr.rel.text, extr.arg2.text)
+            if key not in seen:
+                seen.add(key)
+                uniq.append((conf, extr, ex))
+        # subsumption: drop when a same-rel, higher-conf extraction
+        # contains this one's arg1 or arg2 (OpenParse.scala:110-121)
+        reduced = []
+        for conf, extr, ex in uniq:
+            dominated = any(
+                o_extr.rel == extr.rel and conf < o_conf
+                and (extr.arg1.text in o_extr.arg1.text
+                     or extr.arg2.text in o_extr.arg2.text)
+                for o_conf, o_extr, _ in uniq)
+            if not dominated:
+                reduced.append((conf, extr, ex))
+        reduced.sort(key=lambda t: (-t[0], str(t[1])))
+        return reduced
 
 
 # ------------------------------------------------------------ ollie context

@@ -216,11 +216,10 @@ def feature_vector(graph: DependencyGraph, extr: DetailedExtraction,
     return f
 
 
-def ollie_confidence(features: dict, intercept: float,
-                     weights: dict) -> float:
-    """sigmoid(intercept + w·f) — nlptools LogisticRegression."""
-    z = intercept + sum(w * features.get(name, 0.0)
-                        for name, w in weights.items())
+def ollie_confidence(features, intercept: float, weights) -> float:
+    """sigmoid(intercept + w·f) — nlptools LogisticRegression — over
+    the feature values and weights, both in ``feature_names`` order."""
+    z = intercept + sum(w * f for w, f in zip(weights, features))
     return 1.0 / (1.0 + math.exp(-z))
 
 

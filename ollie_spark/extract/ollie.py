@@ -2,22 +2,22 @@
 (enabling condition, attribution) and the trained logistic confidence
 (ollie/Ollie.scala:19-68, OllieCli.scala:277-288).
 
-``extract_sentence`` is the single-sentence entry the Spark UDF calls
-per row of an Arrow batch; it returns plain dicts ready to become
-DataFrame rows.
+``Ollie.extract`` is the single-sentence entry the Spark UDF calls per
+row of an Arrow batch.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
 
 from ..graph import DependencyGraph
 from ..model.loader import load_classifier, load_extractors
-from .build import (Attribution, DetailedExtraction, EnablingCondition,
-                    OpenParse, OpenParseConfig, attribution,
-                    enabling_condition)
-from .features import feature_names, feature_vector
+from .build import (Attribution, EnablingCondition, OpenParse, attribution,
+                    enabling_condition, simplify_graph)
+from .features import feature_names, feature_vector, ollie_confidence
+
+# the reference's OpenParse confidence threshold (Ollie.scala:23)
+CONFIDENCE_THRESHOLD = 0.005
 
 
 @dataclass(frozen=True)
@@ -49,26 +49,22 @@ class OllieExtractionResult:
 class Ollie:
     """Per-sentence extractor with the default learned model."""
 
-    def __init__(self, extractors=None, config: OpenParseConfig | None = None,
-                 classifier=None):
-        # reference default: confidence threshold 0.005 (Ollie.scala:23)
-        config = config or OpenParseConfig(confidence_threshold=0.005)
-        self.openparse = OpenParse(extractors or load_extractors(), config)
-        self.intercept, self.weights = classifier or load_classifier()
+    def __init__(self):
+        self.openparse = OpenParse(load_extractors(), CONFIDENCE_THRESHOLD)
+        self.intercept, self.weights = load_classifier()
         self.feature_order = feature_names(self.weights)
         # weights in feature_order: scoring is a plain dot product over
         # the ordered tuple (no per-feature dict lookups in the UDF)
         self._weights_ordered = [self.weights[n] for n in self.feature_order]
 
     def extract(self, graph: DependencyGraph) -> list[OllieExtractionResult]:
-        sgraph = self.openparse.simplify_graph(graph)
+        # OpenParse.extract simplifies again, a fixpoint on this graph;
+        # features must see the simplified graph the match ran on
+        sgraph = simplify_graph(graph)
         out = []
-        for op_conf, extr, extractor in self._extract_simplified(sgraph):
+        for op_conf, extr, extractor in self.openparse.extract(sgraph):
             feats = feature_vector(sgraph, extr, extractor, op_conf)
             ordered = tuple(feats[n] for n in self.feature_order)
-            z = self.intercept + sum(
-                w * f for w, f in zip(self._weights_ordered, ordered))
-            conf = 1.0 / (1.0 + math.exp(-z))
             out.append(OllieExtractionResult(
                 arg1_text=extr.arg1.text,
                 rel_text=extr.rel.text,
@@ -77,7 +73,8 @@ class Ollie:
                 rel_span=extr.rel.span,
                 arg2_span=extr.arg2.span,
                 openparse_conf=op_conf,
-                conf=conf,
+                conf=ollie_confidence(ordered, self.intercept,
+                                      self._weights_ordered),
                 enabler=enabling_condition(extr),
                 attribution=attribution(extr),
                 pattern=extractor.pattern.source or
@@ -86,9 +83,3 @@ class Ollie:
             ))
         out.sort(key=lambda r: (-r.conf, str(r)))
         return out
-
-    def _extract_simplified(self, sgraph):
-        # OpenParse.extract re-simplifies, but collapse/simplify_postags
-        # are fixpoints, so feeding the simplified graph back is safe —
-        # and features must see the simplified graph the match ran on.
-        return self.openparse.extract(sgraph)

@@ -11,7 +11,7 @@ The reference's four output formats over our extraction results:
 
 from __future__ import annotations
 
-from ..graph import DependencyGraph, Node, parse_node
+from ..graph import Node, parse_node
 from .build import Attribution, EnablingCondition
 from .ollie import OllieExtractionResult
 
@@ -57,12 +57,11 @@ def deserialize_attribution(s: str) -> Attribution | None:
                        _unesc(rel), (int(r0), int(r1) + 1))
 
 
-def serialize_part(text: str, span: tuple, nodes=None) -> str:
-    """Part as ``text ;;; node; node`` (OllieExtraction.scala:173-175).
-    Without node provenance, a single synthetic node covers the span."""
-    if nodes is None:
-        nodes = [Node(text, "UNK", span[0], span[1], 0)]
-    return text + " ;;; " + "; ".join(n.serialize() for n in nodes)
+def serialize_part(text: str, span: tuple) -> str:
+    """Part as ``text ;;; node`` (OllieExtraction.scala:173-175): a
+    result carries no node provenance, so one synthetic node covers
+    the span."""
+    return text + " ;;; " + Node(text, "UNK", span[0], span[1], 0).serialize()
 
 
 def deserialize_part(s: str) -> tuple[str, list[Node]]:

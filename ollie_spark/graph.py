@@ -278,10 +278,6 @@ class DependencyGraph:
         """All edges touching node (both directions)."""
         return list(self.out_edges(node)) + list(self.in_edges(node))
 
-    def successors(self, node, pred=None):
-        """Dependents of node via out-edges satisfying pred(edge)."""
-        return [e.dst for e in self.out_edges(node) if pred is None or pred(e)]
-
     def predecessors(self, node, pred=None):
         """Governors of node via in-edges satisfying pred(edge)."""
         return [e.src for e in self.in_edges(node) if pred is None or pred(e)]
@@ -326,11 +322,6 @@ class DependencyGraph:
         def fix(n):
             t = _SIMPLIFY_POSTAG.get(n.postag)
             return n if t is None else n.with_postag(t)
-        return self._map_nodes(fix)
-
-    def simplify_vb_postags(self) -> "DependencyGraph":
-        def fix(n):
-            return n.with_postag("VB") if n.postag.startswith("VB") else n
         return self._map_nodes(fix)
 
     def _map_nodes(self, fix):

@@ -278,14 +278,6 @@ class Pattern:
                 last = "{prep}"
         return last
 
-    def is_passive_shape(self) -> bool:
-        """OllieExtractionInstance.passive's pattern-shape half."""
-        return re.match(r"^\{arg1:?\w*\} <nsubjpass<.*", self.serialize()) is not None
-
-    def is_active_shape(self) -> bool:
-        return re.match(r"^\{arg1:?\w*\} <nsubj<.*>dobj> \{arg2:?\w*\}",
-                        self.serialize()) is not None
-
 
 class Match:
     """A binding of pattern captures onto graph nodes/edges."""

@@ -15,7 +15,9 @@ from pyspark.sql import functions as F
 
 from ..model.wordlists import SIMPLE_PREPOSITIONS
 
-_PREP_ALT = "|".join(sorted(SIMPLE_PREPOSITIONS, key=len, reverse=True))
+# longest first; ties by text, so the pattern (and every plan that
+# embeds it) is the same in every process whatever its hash seed
+_PREP_ALT = "|".join(sorted(SIMPLE_PREPOSITIONS, key=lambda p: (-len(p), p)))
 _TRAIL_RE = f"^(.*) ({_PREP_ALT})$"
 
 

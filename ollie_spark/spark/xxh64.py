@@ -3,12 +3,11 @@
 Implements the XXH64 variant Spark uses for the ``xxhash64`` expression
 (catalyst ``XxHash64`` / ``XXH64.java``): per-field streaming where the
 running hash seeds the next field, initial seed 42; strings hash their
-UTF-8 bytes, int fields use the 4-byte finalizer, long fields the
-8-byte finalizer.  Parity with the JVM implementation is pinned by a
-property test against ``F.xxhash64`` over random inputs
-(tests/test_linking.py), and transitively by the escape-hatch
-equivalence tests — the local blocking path in linking.py exists only
-because these values are identical to Spark's.
+UTF-8 bytes, int fields use the 4-byte finalizer.  Parity with the JVM
+implementation is pinned by a property test against ``F.xxhash64``
+over random inputs (tests/test_linking.py), and transitively by the
+escape-hatch equivalence tests — the local blocking path in linking.py
+exists only because these values are identical to Spark's.
 """
 
 from __future__ import annotations
@@ -41,14 +40,6 @@ def hash_int(value: int, seed: int) -> int:
     h = (seed + _P5 + 4) & _M
     h ^= ((value & 0xFFFFFFFF) * _P1) & _M
     h = (_rotl(h, 23) * _P2 + _P3) & _M
-    return _fmix(h)
-
-
-def hash_long(value: int, seed: int) -> int:
-    """XXH64 8-byte finalizer (Spark LongType field)."""
-    h = (seed + _P5 + 8) & _M
-    h ^= (_rotl((value & _M) * _P2 & _M, 31) * _P1) & _M
-    h = (_rotl(h, 27) * _P1 + _P4) & _M
     return _fmix(h)
 
 
@@ -102,15 +93,12 @@ def _signed(h: int) -> int:
 
 def xxhash64(*fields) -> int:
     """``F.xxhash64(*fields)`` for python values: str fields hash UTF-8
-    bytes, int fields must be tagged with their Spark type — pass a
-    plain ``int`` for IntegerType literals and ``("long", v)`` for
-    LongType.  Returns the signed 64-bit value Spark returns."""
+    bytes, ``int`` fields hash as IntegerType.  Returns the signed
+    64-bit value Spark returns."""
     h = SPARK_SEED
     for f in fields:
         if isinstance(f, str):
             h = hash_bytes(f.encode("utf-8"), h)
-        elif isinstance(f, tuple) and f[0] == "long":
-            h = hash_long(f[1], h)
         elif isinstance(f, int):
             h = hash_int(f, h)
         else:

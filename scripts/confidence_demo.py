@@ -31,12 +31,13 @@ def main():
     intercept, weights = load_classifier()
     order = feature_names(weights)
     rows = feature_rows(insts, order)
+    ordered = [weights[n] for n in order]
 
     base_rate = max(sum(l for _, l in rows),
                     len(rows) - sum(l for _, l in rows)) / len(rows)
     shipped_correct = sum(
-        int((ollie_confidence(dict(zip(order, f)), intercept, weights)
-             >= 0.5) == bool(l)) for f, l in rows)
+        int((ollie_confidence(f, intercept, ordered) >= 0.5) == bool(l))
+        for f, l in rows)
 
     spark = build_session("confidence-demo", master="local[8]",
                           shuffle_partitions=8)
@@ -45,10 +46,10 @@ def main():
         rows, "features array<double>, label int")
 
     new_intercept, new_weights = train_confidence(labelled, order)
+    new_ordered = [new_weights[n] for n in order]
     retrained_correct = sum(
-        int((ollie_confidence(dict(zip(order, f)), new_intercept,
-                              new_weights) >= 0.5) == bool(l))
-        for f, l in rows)
+        int((ollie_confidence(f, new_intercept, new_ordered) >= 0.5)
+            == bool(l)) for f, l in rows)
     cv_acc = cross_validate_confidence(labelled, folds=10)
 
     top = sorted(new_weights.items(), key=lambda kv: -abs(kv[1]))[:8]

@@ -64,7 +64,6 @@ def main():
     from ollie_spark.bootstrap.stages import (SEED_SCHEMA,
                                               model_rows_to_extractors,
                                               train_model)
-    from ollie_spark.extract.build import OpenParse, OpenParseConfig
     from ollie_spark.spark.corpus import corpus, expected_triples
     from ollie_spark.spark.session import build_session
     from ollie_spark.spark.pipeline import (MENTIONS_SCHEMA, sentences)

@@ -78,9 +78,10 @@ def test_reference_training_data_parses_and_scores():
     intercept, weights = load_classifier()
     order = feature_names(weights)
     rows = feature_rows(insts, order)
+    ordered = [weights[n] for n in order]
     correct = sum(
-        int((ollie_confidence(dict(zip(order, f)), intercept, weights)
-             >= 0.5) == bool(l)) for f, l in rows)
+        int((ollie_confidence(f, intercept, ordered) >= 0.5) == bool(l))
+        for f, l in rows)
     base = max(sum(l for _, l in rows),
                len(rows) - sum(l for _, l in rows))
     assert correct > base  # beats majority class

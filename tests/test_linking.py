@@ -288,6 +288,23 @@ def test_nary_rollup(spark):
         ("from", "Tokyo"), ("to", "Delhi")]
 
 
+def test_nary_pattern_is_independent_of_hash_seed():
+    """The preposition alternation embedded in kg_nary's plan must not
+    follow the set iteration order of SIMPLE_PREPOSITIONS: two processes
+    with different hash seeds print the same pattern."""
+    import os
+    import subprocess
+    import sys
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = "from ollie_spark.spark.nary import _TRAIL_RE; print(_TRAIL_RE)"
+    out = [subprocess.run(
+        [sys.executable, "-c", code], cwd=root, check=True,
+        capture_output=True, text=True,
+        env={**os.environ, "PYTHONHASHSEED": seed}).stdout
+        for seed in ("0", "1")]
+    assert out[0] == out[1] and out[0].startswith("^(.*) (")
+
+
 def test_stage_writer_resume(spark, mentions, tmp_path):
     w = StageWriter(spark, str(tmp_path), n_buckets=8)
     r1 = w.run_stage("mentions", mentions)

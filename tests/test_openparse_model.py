@@ -21,8 +21,8 @@ def extractors():
 
 
 @pytest.fixture(scope="module")
-def ollie(extractors):
-    return Ollie(extractors)
+def ollie():
+    return Ollie()
 
 
 def test_model_loads(extractors):
